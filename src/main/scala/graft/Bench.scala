@@ -130,12 +130,17 @@ object Bench {
       spark.streams.resetTerminated()
       System.gc()
     }
-    def sampleOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a query that throws is an ERROR, never a sample: a fast failure timed
+    // as a sample would lower the total
+    def sampleOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Either[String, Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val failure =
+        try { fn(spark, sfDir).count(); None }
+        catch { case t: Throwable => Some(s"${t.getClass.getName}: ${t.getMessage}") }
       val d = (System.nanoTime() - t0) / 1e9
       cleanup()
-      d
+      failure.toLeft(d)
     }
     // optional comma-separated subset for targeted profiling runs
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -150,9 +155,12 @@ object Bench {
       // metadata so a round-over-round drift can be attributed to host
       // noise (min≈median stable, spread wide) vs a real plan change
       // (min itself moves) without re-running the suite.
-      val samples = (0 until 3).map(_ => sampleOnce(fn)).sorted
+      // (stops at the first failure — the query is an error either way)
+      val samples = (0 until 3).foldLeft[Either[String, Vector[Double]]](Right(Vector.empty)) {
+        (acc, _) => acc.flatMap(v => sampleOnce(fn).map(v :+ _))
+      }.map(_.sorted)
       pulses(i + 1) = pulse()
-      (name, samples(0), samples(1)) // (min, median of 3)
+      (name, samples.map(s => (s(0), s(1)))) // (min, median of 3)
     }
     // base = run MEDIAN pulse, not min: the min sits at the fast tail of
     // ordinary scheduler jitter, so 1.5x-of-min flags half the run
@@ -160,17 +168,19 @@ object Bench {
     // steady-state and a real contention window still clears 1.5x of it
     val pulseBase = pulses.sorted.apply(pulses.length / 2)
     val contendedIdx = sampled0.indices.filter { i =>
-      math.max(pulses(i), pulses(i + 1)) > 1.5 * pulseBase
+      sampled0(i)._2.isRight && math.max(pulses(i), pulses(i + 1)) > 1.5 * pulseBase
     }.toSet
     // one re-sample per flagged query at run end, min-merged: if the
     // contention window has passed, the phantom disappears from the
     // headline; if not, the flag tells the reader the min is an upper bound
-    val sampled = sampled0.zipWithIndex.map { case ((name, mn, md), i) =>
-      if (contendedIdx(i)) {
-        val again = sampleOnce(queryList(i)._2)
-        (name, math.min(mn, again), md)
-      } else (name, mn, md)
+    val resampled = sampled0.zipWithIndex.map { case ((name, r), i) =>
+      name -> (if (!contendedIdx(i)) r else r.flatMap { case (mn, md) =>
+        sampleOnce(queryList(i)._2).map(again => (math.min(mn, again), md))
+      })
     }
+    val sampled = resampled.collect { case (name, Right((mn, md))) => (name, mn, md) }
+    val errors = resampled.collect { case (name, Left(msg)) => name -> msg }
+    errors.foreach { case (name, msg) => System.err.println(s"[bench] $name FAILED: $msg") }
     val contendedNames = contendedIdx.toSeq.sorted.map(i => sampled0(i)._1)
     // Run-level host factor, cross-checked against the run's OWN pulse
     // series before it becomes the record: round 12's one-shot
@@ -213,7 +223,11 @@ object Bench {
     // gaps) is the run's own noise floor; a round-over-round total drift
     // smaller than this gap is jitter, not regression
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_samples":3,"med_total":${fmt(medTotal)},"calib_sec":${fmt(calibSec)},"host_factor":${fmt(hostFactor)},"host_factor_pulse":${fmt(pulseFactor)},"calib_reruns":$calibReruns,"pulse_base":${fmt(pulseBase)},"n_contended":${contendedNames.size},"streaming_sub":${fmt(streamingSub)},"batch_sub":${fmt(total - streamingSub)},"queries":{"""
-    val tail = s"""},"sf":"$sfName"}"""
+    // failed queries are named, never folded into the total
+    val errorsJson = errors.map { case (n, _) => s"\"$n\"" }.mkString("[", ",", "]")
+    val tail =
+      if (errors.isEmpty) s"""},"sf":"$sfName"}"""
+      else s"""},"sf":"$sfName","errors":$errorsJson}"""
     val budget = 1850 - head.length - tail.length - 24 // room for "other"
     val entries = results.sortBy { case (k, v) => (-v, k) }
       .map { case (k, v) => s"\"$k\":${fmt(v)}" }
@@ -240,7 +254,7 @@ object Bench {
     val contendedJson = contendedNames.map(n => s"\"$n\"").mkString("[", ",", "]")
     val pulsesJson = pulses.map(fmt).mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_samples":3,"med_total":${fmt(medTotal)},"calib_sec":${fmt(calibSec)},"host_factor":${fmt(hostFactor)},"host_factor_pulse":${fmt(pulseFactor)},"calib_reruns":$calibReruns,"pulse_base":${fmt(pulseBase)},"contended":$contendedJson,"pulses":$pulsesJson,"streaming_sub":${fmt(streamingSub)},"batch_sub":${fmt(total - streamingSub)},"queries":$full,"queries_med":$med,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_samples":3,"med_total":${fmt(medTotal)},"calib_sec":${fmt(calibSec)},"host_factor":${fmt(hostFactor)},"host_factor_pulse":${fmt(pulseFactor)},"calib_reruns":$calibReruns,"pulse_base":${fmt(pulseBase)},"contended":$contendedJson,"pulses":$pulsesJson,"streaming_sub":${fmt(streamingSub)},"batch_sub":${fmt(total - streamingSub)},"queries":$full,"queries_med":$med,"errors":$errorsJson,"sf":"$sfName"}"""
     val outFile = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fullLine + "\n").getBytes("UTF-8"))
@@ -250,5 +264,9 @@ object Bench {
     spark.stop()
     println(head + qs + tail)
     System.out.flush()
+    if (errors.nonEmpty) {
+      System.err.println(s"[bench] ${errors.size} of ${queryList.size} queries FAILED")
+      sys.exit(1)
+    }
   }
 }

@@ -197,13 +197,6 @@ object BucketedRun {
     def tracked(df: DataFrame): DataFrame = { tempCaches += df.cache(); df }
     def releaseAll(): Unit = tempCaches.foreach(_.unpersist(blocking = false))
 
-    def prof[T](label: String)(f: => T): T =
-      if (!sys.env.contains("GRAFT_PROF")) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"PROFB $label ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-
     /** Batch-lifetime scoped view of one stored table: widens bucket by
       * bucket as the batch discovers touched keys, stages once at the end.
       * Tables that were only READ (e.g. an index consulted by a batch that
@@ -266,7 +259,7 @@ object BucketedRun {
         }.getOrElse(buckets)
       }
       def stage(): Option[StagedTable] = {
-        val changed = prof(s"diff:$name")(changedBuckets())
+        val changed = changedBuckets()
         if (changed.isEmpty) None
         else {
           val plan = rows.queryExecution.executedPlan.toString
@@ -290,13 +283,13 @@ object BucketedRun {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val stagedF = scoped.toSeq.collect {
-        case (n, sc) if sc.dirty => n -> Future(prof(s"stage:$n")(sc.stage()))
+        case (n, sc) if sc.dirty => n -> Future(sc.stage())
       }
       // await EVERY future before surfacing a failure: a still-running stage
       // must not add to the store's stage metadata after the caller's catch
       // has discarded this batch's deltas
-      val awaited = prof("stage:await") {
-        stagedF.map { case (n, f) => n -> scala.util.Try(Await.result(f, Duration.Inf)) } }
+      val awaited =
+        stagedF.map { case (n, f) => n -> scala.util.Try(Await.result(f, Duration.Inf)) }
       awaited.collectFirst { case (_, scala.util.Failure(e)) => throw e }
       // tables whose fingerprints elided the write (Success(None)) are
       // omitted: their committed buckets stand untouched
@@ -396,7 +389,7 @@ object BucketedRun {
       broadcast(values.toDF(name))
 
     val scope = new BatchScope(spark, store, batchId)
-    import scope.{prof, scoped, scopedTable, tracked}
+    import scope.{scoped, scopedTable, tracked}
 
     // AQE off for the batch body: every frame here is either a broadcast
     // local relation or a few scoped buckets, so runtime re-planning buys
@@ -504,9 +497,8 @@ object BucketedRun {
           // (it also materializes `fresh` into its cache for the updates
           // below). Triples, not bare keys: the driver derives touched keys
           // AND whether the index content actually changed.
-          val collected = prof(s"triples:${spec.target}") {
-            oldTriples.unionByName(freshTriples)
-              .as[(String, String, String, Boolean)].collect() }
+          val collected = oldTriples.unionByName(freshTriples)
+            .as[(String, String, String, Boolean)].collect()
           val oldT = collected.collect { case (t, i, k, false) => (t, i, k) }.toSet
           val newT = collected.collect { case (t, i, k, true) => (t, i, k) }.toSet
           val touched: Set[String] = (oldT ++ newT).map(_._3)
@@ -566,9 +558,8 @@ object BucketedRun {
           val stale = specs.map(s =>
             col(SourceType) === s.source && col(Version) =!= s.version
           ).reduce(_ || _)
-          val staleKeys = prof(s"stale:${rspec.target}") {
-            table.filter(!col(Deleted) && stale)
-              .select(col(Key)).distinct().as[String].collect().toSet }
+          val staleKeys = table.filter(!col(Deleted) && stale)
+            .select(col(Key)).distinct().as[String].collect().toSet
           val ready: Set[String] = keys -- staleKeys
           val readyKeys = localCol(Key, ready.toSeq)
 
@@ -619,7 +610,7 @@ object BucketedRun {
       }
 
       val report = BatchReport(scope.stageDirty())
-      prof("commit")(store.commit(batchId, ledger))
+      store.commit(batchId, ledger)
       report
     } catch {
       // a failed batch must not leak its half-staged deltas into the next
@@ -661,7 +652,7 @@ object BucketedRun {
     if (store.committedBatch.exists(_ >= batchId)) return BatchReport(Map.empty)
 
     val scope = new BatchScope(spark, store, batchId)
-    import scope.{prof, scoped, scopedTable, tracked}
+    import scope.{scoped, scopedTable, tracked}
 
     /** Distinct buckets of a single-column frame — the ONLY collects here. */
     def bucketsOf(df: DataFrame, c: String): Set[Int] =
@@ -680,7 +671,7 @@ object BucketedRun {
       // these seqs as the current revisions)
       if (store.tableNames.contains(SeqTable)) {
         val seqTbl = scopedTable(SeqTable, SourceId)
-        seqTbl.widen(prof("seqbuckets")(bucketsOf(newest, "resourceId")))
+        seqTbl.widen(bucketsOf(newest, "resourceId"))
         // monotonic merge, same contract as the driver path: greatest of
         // (stored, batch) per id — an out-of-order backlog replay must not
         // regress revisions a CAS writer already observed
@@ -711,8 +702,7 @@ object BucketedRun {
           .select(col("resourceId").as(SourceId)))
         val deletes = tracked(batch.filter(col("change") === Change.Deleted)
           .select(col("resourceId").as(SourceId)))
-        val idBuckets = prof(s"idbuckets:$sourceName") {
-          bucketsOf(batch, "resourceId") }
+        val idBuckets = bucketsOf(batch, "resourceId")
         if (idBuckets.nonEmpty) for (spec <- specs) {
           val idx = scopedTable(indexName(spec.target), SourceId)
           val idxRows = idx.widen(idBuckets)
@@ -738,8 +728,7 @@ object BucketedRun {
           val touchedKeys = tracked(oldTriples.select(col(Key))
             .unionByName(freshTriples.select(col(Key))).distinct())
           val tbl = scopedTable(spec.target, Key)
-          tbl.widen(prof(s"keybuckets:${spec.target}") {
-            bucketsOf(touchedKeys, Key) })
+          tbl.widen(bucketsOf(touchedKeys, Key))
 
           // 4. delete-old-then-rewrite within the scoped buckets only —
           // identical algebra to the driver path, joins instead of isin
@@ -802,8 +791,7 @@ object BucketedRun {
           // replace ready keys wholesale inside the reduce table's touched
           // buckets; an empty group yields no row = output delete
           val rtbl = scopedTable(rspec.target, Key)
-          rtbl.widen(prof(s"readybuckets:${rspec.target}") {
-            bucketsOf(ready, Key) })
+          rtbl.widen(bucketsOf(ready, Key))
           rtbl.update { old =>
             old.join(ready, Seq(Key), "left_anti")
               .unionByName(recomputed, allowMissingColumns = true)
@@ -820,8 +808,7 @@ object BucketedRun {
               rows.join(ready.withColumnRenamed(Key, "__k"),
                 col(Key) === col("__k") && col(Deleted), "left_anti")
             }
-            val purgedBuckets = prof(s"purgebuckets:$mapTarget") {
-              bucketsOf(purged, SourceId) }
+            val purgedBuckets = bucketsOf(purged, SourceId)
             if (purgedBuckets.nonEmpty) {
               val idx = scopedTable(indexName(mapTarget), SourceId)
               idx.widen(purgedBuckets)
@@ -838,7 +825,7 @@ object BucketedRun {
       }
 
       val report = BatchReport(scope.stageDirty())
-      prof("commit")(store.commit(batchId, ledger))
+      store.commit(batchId, ledger)
       report
     } catch {
       case e: Throwable => store.discardStaged(); throw e

@@ -2,10 +2,17 @@ package graft.incr
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.Base64
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Hash-bucketed durable state — the A3/A4 sink shaped for 100 TB.
@@ -18,6 +25,16 @@ import scala.jdk.CollectionConverters._
   * write-new-then-swap-manifest protocol the whole-table store used
   * (crash mid-write leaves the previous consistent snapshot committed;
   * reference analogue: deferred tombstone purge, processor.py:141-148).
+  *
+  * Reads ([[table]], [[readBuckets]], [[tableAsOf]]) resolve their files
+  * from the manifest: one driver `Files.list` per referenced directory,
+  * eagerly at open (a missing directory fails there), handed to Spark as a
+  * fixed file list — no Spark job before the first action. Above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths,
+  * `spark.read.parquet(dirs)` would instead run a distributed listing job on
+  * every open. Raising that threshold was not the fix: it is session-global,
+  * every caller's session (readers use `spark.newSession()`) would need it,
+  * and Spark would still check and list each path.
   *
   * Layout:
   * {{{
@@ -164,10 +181,28 @@ final class BucketedStateStore(val root: String, val numBuckets: Int = 32,
     val schema = StructType.fromDDL(ddl)
     if (rels.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else
-      // explicit schema: skips footer merging and keeps column order stable
-      // across bucket directories written by different batches
-      spark.read.schema(schema).parquet(rels.map(r => s"$root/$r"): _*)
+    else {
+      // list the manifest's directories on the driver (see the class doc),
+      // eagerly: a missing directory fails here, at open, and frames keep
+      // the files they resolved (the vacuum grace contract)
+      val dirs = rels.map(r => Paths.get(root, r).toAbsolutePath)
+      def hadoopPath(p: java.nio.file.Path) = new Path(new java.net.URI("file", "", p.toString, null))
+      val files = dirs.flatMap { d =>
+        if (!Files.isDirectory(d))
+          throw new java.io.FileNotFoundException(s"bucket directory does not exist: $d")
+        BucketedStateStore.dataFiles(d).map { case (f, attrs) =>
+          new FileStatus(attrs.size, false, 1, BucketedStateStore.LocalBlockSize,
+            attrs.lastModifiedTime.toMillis, hadoopPath(f))
+        }
+      }
+      // explicit schema: skips footer merging, keeps column order stable
+      // across bucket directories written by different batches, and reads
+      // columns added by evolveTable as NULL from older files
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        new ManifestFileIndex(dirs.map(hadoopPath), files),
+        StructType(Nil), BucketedStateStore.nullable(schema), None,
+        new ParquetFileFormat, Map.empty)(spark))
+    }
   }
 
   /** Stage replacement content for `buckets` of `name`. `rows` must hold
@@ -391,13 +426,7 @@ final class BucketedStateStore(val root: String, val numBuckets: Int = 32,
   }
 
   private def bucketDirHealthy(dir: java.nio.file.Path): Boolean =
-    Files.isDirectory(dir) && {
-      val s = Files.list(dir)
-      try s.iterator().asScala.exists { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith(".") && Files.size(p) > 0
-      } finally s.close()
-    }
+    Files.isDirectory(dir) && BucketedStateStore.dataFiles(dir).nonEmpty
 
   /** Delete stage directories no committed bucket references (safe GC —
     * includes orphans from crashed batches). Directories staged for a batch
@@ -434,4 +463,60 @@ final class BucketedStateStore(val root: String, val numBuckets: Int = 32,
       }
     }
   }
+}
+
+object BucketedStateStore {
+  /** Hadoop's local-filesystem block size (`fs.local.block.size` default),
+    * the value a Spark listing of these files would report. */
+  private val LocalBlockSize = 32L << 20
+
+  /** A bucket directory's data files, sorted by name: non-hidden (no `_` or
+    * `.` prefix) `.parquet` files with content. The ONE definition both
+    * reads and [[BucketedStateStore.fsck]] use, so a directory fsck calls
+    * healthy is exactly one a read can serve; `_SUCCESS`, `.crc` and other
+    * siblings are never read. */
+  private[incr] def dataFiles(dir: java.nio.file.Path): Seq[(java.nio.file.Path, BasicFileAttributes)] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.flatMap { p =>
+      val n = p.getFileName.toString
+      if (!n.endsWith(".parquet") || n.startsWith("_") || n.startsWith(".")) None
+      else {
+        val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+        if (a.isRegularFile && a.size > 0) Some(p -> a) else None
+      }
+    }.toList.sortBy(_._1.getFileName.toString)
+    finally s.close()
+  }
+
+  /** Every field and nested element nullable — the shape Spark's parquet
+    * reader gives a user-specified schema. */
+  private[incr] def nullable(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case ArrayType(e, _) => ArrayType(nullableType(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullableType(k), nullableType(v), valueContainsNull = true)
+    case other => other
+  }
+}
+
+/** The fixed file list of one manifest-resolved read: no partition columns,
+  * no discovery, no refresh (bucket directories are immutable). Equal by
+  * root directories, like Spark's `InMemoryFileIndex`, so two reads of the
+  * same buckets still match the cache manager and exchange reuse. */
+private final class ManifestFileIndex(override val rootPaths: Seq[Path],
+                                      files: Seq[FileStatus]) extends FileIndex {
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.map(FileStatusWithMetadata(_))))
+  override def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+  override def refresh(): Unit = ()
+  override lazy val sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = StructType(Nil)
+  override def equals(o: Any): Boolean = o match {
+    case m: ManifestFileIndex => m.rootPaths.toSet == rootPaths.toSet
+    case _ => false
+  }
+  override def hashCode: Int = rootPaths.toSet.hashCode
 }

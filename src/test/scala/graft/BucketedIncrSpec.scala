@@ -7,6 +7,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Bucketed incremental state: same semantics as [[IncrementalRun]] (the
   * spec-level ground truth is always a full recompute), but per-batch IO
@@ -628,6 +629,144 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
       .select(col(SourceId), col(Key), col(Value), col(Deleted))
       .as[(String, String, Double, Boolean)].collect().toSet
     assert(mRows(storeD) == mRows(storeS))
+  }
+
+  // ---- manifest-resolved reads ---------------------------------------------
+
+  /** A 64-bucket store with every bucket of "r" populated — above Spark's
+    * 32-path parallel-discovery threshold, where a `spark.read.parquet`
+    * of the bucket directories would launch a listing job. */
+  private def wideRows(bump: Set[Int] = Set.empty): DataFrame =
+    (0 until 1000).map(i => (s"id$i", s"k$i", if (bump(i)) i + 0.5 else i.toDouble))
+      .toDF("id", "k", "v")
+
+  private def wideStore(): BucketedStateStore = {
+    val store = newStore(buckets = 64)
+    BucketedRun.initialize(pipeline, _ => wideRows(), store)
+    assert(store.bucketPaths("r").size == 64)
+    store
+  }
+
+  /** The read the store made before it resolved files from the manifest. */
+  private def sparkListedRead(store: BucketedStateStore, rels: Iterable[String],
+                              schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).parquet(rels.toSeq.map(r => s"${store.root}/$r"): _*)
+
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema == want.schema)
+    assert(got.collect().map(_.toString).sorted.toSeq ==
+      want.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("opening table, readBuckets and tableAsOf on 64 buckets runs no Spark job") {
+    val store = wideStore()
+    val b0 = store.committedBatch.get
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("store-open", "open frames without an action")
+      val frames = Seq(store.table(spark, "r"), store.readBuckets(spark, "r", 0 until 64),
+        store.tableAsOf(spark, "r", b0))
+      // the listener bus delivers in order: once the marker job is seen,
+      // every job the opens started has been seen too
+      sc.setJobGroup("store-marker", "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("store-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("store-marker"))
+      assert(!groups.contains("store-open"), "opening a store frame ran a Spark job")
+      sc.clearJobGroup()
+      frames.foreach(f => assert(f.count() == 1000))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("manifest reads match a Spark-listed read: full, scoped and as-of") {
+    val store = wideStore()
+    val b0 = store.committedBatch.get
+    val dirs0 = store.bucketPaths("r")
+    val schema = store.table(spark, "r").schema
+    assertSameRows(store.table(spark, "r"), sparkListedRead(store, dirs0.values, schema))
+    val some = Seq(3, 17, 40)
+    assertSameRows(store.readBuckets(spark, "r", some),
+      sparkListedRead(store, some.map(dirs0), schema))
+    assert(store.table(spark, "r").inputFiles.toSet ==
+      sparkListedRead(store, dirs0.values, schema).inputFiles.toSet)
+
+    // tableAsOf on an older retained snapshot reads that batch's directories
+    BucketedRun.applyChanges(pipeline, _ => wideRows(Set(1, 2)), store,
+      changes((1, Change.Updated, "id1"), (2, Change.Updated, "id2")), 2L, batchId = b0 + 1)
+    BucketedRun.applyChanges(pipeline, _ => wideRows(Set(1, 2, 3)), store,
+      changes((3, Change.Updated, "id3")), 3L, batchId = b0 + 2)
+    assert(store.bucketPaths("r") != dirs0)
+    assertSameRows(store.tableAsOf(spark, "r", b0), sparkListedRead(store, dirs0.values, schema))
+  }
+
+  test("manifest reads match a Spark-listed read: empty table, evolved schema, sibling files") {
+    // an empty table has no bucket directories at all
+    val empty = newStore()
+    BucketedRun.initialize(pipeline, _ => srcDf(), empty)
+    assert(empty.bucketPaths("r").isEmpty)
+    // (its frame keeps the DDL's nullability, as it always has)
+    val e = empty.table(spark, "r")
+    val listed = sparkListedRead(empty, Nil, e.schema)
+    assert(e.schema.map(f => f.name -> f.dataType) == listed.schema.map(f => f.name -> f.dataType))
+    assert(e.collect().isEmpty && listed.collect().isEmpty)
+
+    val store = newStore()
+    val data = srcDf(("a", "k1", 1.0), ("b", "k2", 2.0), ("c", "k3", 3.0))
+    BucketedRun.initialize(pipeline, _ => data, store)
+    val b0 = store.committedBatch.get
+
+    // after evolveTable, files written before it read the new column as NULL
+    store.evolveTable("r", "extra BIGINT")
+    store.commit(b0 + 1)
+    val evolved = store.table(spark, "r")
+    assert(evolved.columns.contains("extra"))
+    assert(evolved.filter(col("extra").isNotNull).count() == 0)
+    assertSameRows(evolved, sparkListedRead(store, store.bucketPaths("r").values, evolved.schema))
+
+    // _SUCCESS, .crc and other hidden siblings are never read
+    val rel = store.bucketPaths("r").values.head
+    val dir = java.nio.file.Paths.get(store.root, rel)
+    Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(dir.resolve("_committed_123"), "{}".getBytes)
+    Files.write(dir.resolve(".part-x.parquet.crc"), "crc".getBytes)
+    Files.write(dir.resolve(".hidden.parquet"), "not parquet".getBytes)
+    val withSiblings = store.table(spark, "r")
+    assert(withSiblings.inputFiles.forall(_.endsWith(".parquet")))
+    assert(withSiblings.inputFiles.forall { f =>
+      val n = f.split('/').last; !n.startsWith("_") && !n.startsWith(".") })
+    assertSameRows(withSiblings,
+      sparkListedRead(store, store.bucketPaths("r").values, withSiblings.schema))
+  }
+
+  test("a deleted bucket directory fails at open, before any action") {
+    val store = newStore()
+    BucketedRun.initialize(pipeline,
+      _ => (1 to 16).map(i => (s"id$i", s"k$i", i.toDouble)).toDF("id", "k", "v"), store)
+    val paths = store.bucketPaths("r")
+    assert(paths.size >= 2)
+    val (lost, rel) = paths.head
+    val survivors = store.readBuckets(spark, "r", (paths - lost).keys).count()
+    val dir = java.nio.file.Paths.get(store.root, rel)
+    val s = Files.walk(dir)
+    try s.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally s.close()
+    // no action runs: each open itself throws, naming the lost directory
+    Seq(() => store.table(spark, "r"), () => store.readBuckets(spark, "r", Seq(lost)),
+      () => store.tableAsOf(spark, "r", store.committedBatch.get)).foreach { open =>
+      assert(intercept[Exception](open()).getMessage.contains(rel))
+    }
+    // buckets whose directories survive still read
+    assert(store.readBuckets(spark, "r", (paths - lost).keys).count() == survivors)
   }
 
   test("incr_schema_evolve query is a fixed point across invocations") {

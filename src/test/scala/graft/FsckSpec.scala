@@ -111,4 +111,34 @@ class FsckSpec extends AnyFunSuite with SparkTestBase {
       Seq(Change(1, Change.Updated, "src", "b")).toDS(), 1L, batchId = 2)
     assert(reduced(store) == Map("k1" -> 1.0, "k2" -> 12.0))
   }
+
+  test("fsck and reads share one definition of a bucket's data files") {
+    val store = newStore()
+    val data = srcDf((1 to 16).map(i => (s"id$i", s"k$i", i.toDouble)): _*)
+    BucketedRun.initialize(pipeline, _ => data, store)
+    val Seq((b1, rel1), (b2, rel2)) = store.bucketPaths("r").toSeq.sortBy(_._1).take(2)
+    val rows2 = store.readBuckets(spark, "r", Seq(b2)).count()
+    def put(rel: String, name: String, bytes: Array[Byte]): Unit =
+      Files.write(Paths.get(store.root, rel, name), bytes)
+
+    // b1 keeps only files that are not data: its parts go, siblings stay
+    val parts = Files.list(Paths.get(store.root, rel1))
+    try parts.iterator().asScala.toSeq.foreach(Files.delete) finally parts.close()
+    put(rel1, "_SUCCESS", Array.emptyByteArray)
+    put(rel1, ".part-0.parquet.crc", "crc".getBytes)
+    put(rel1, "_tmp.parquet", "partial".getBytes)
+    put(rel1, "part-0.parquet", Array.emptyByteArray)
+    put(rel1, "notes.txt", "not parquet".getBytes)
+    // b2 gains the same siblings next to its real part
+    put(rel2, "_SUCCESS", Array.emptyByteArray)
+    put(rel2, "notes.txt", "not parquet".getBytes)
+
+    // fsck calls b1 damaged and b2 healthy; reads serve exactly that: no
+    // rows from b1, b2's rows, and no sibling file is ever opened
+    assert(store.fsck() == Seq(("r", b1, rel1)))
+    val r1 = store.readBuckets(spark, "r", Seq(b1))
+    assert(r1.inputFiles.isEmpty && r1.count() == 0)
+    val r2 = store.readBuckets(spark, "r", Seq(b2))
+    assert(r2.inputFiles.length == 1 && r2.count() == rows2)
+  }
 }

@@ -29,8 +29,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // subtree now plans inline with the full-postings df scan replaced by
     // a bucket+term-pruned read — fewer scans and exchanges overall
     // (plans/r13/search_hybrid_rrf_{before,after}.txt), one plan instead
-    // of cache-populate + probe
-    "search_hybrid_rrf" -> 13,
+    // of cache-populate + probe.
+    // 13 -> 12 in round 14: the two-tower retrieval pushes its probe ids
+    // into the embeddings scan as `PushedFilters: [In(vec_id, …)]`, which
+    // replaces the exchange that joined the probes against the full
+    // embeddings scan (plans/r15/search_hybrid_rrf_{before,after}.txt)
+    "search_hybrid_rrf" -> 12,
     "mm_decode_video" -> 2,
     "dedup_minhash_incr" -> 4,
     "sim_recall_lsh" -> 0, // dashboard: control rows, work in the counts

@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: for each query result
 written by graft.Verify, run the oracle SQL in DuckDB over the same parquet
-tables and compare (columns sorted by name, rows sorted, exact values)."""
+tables and compare (columns sorted by name, rows sorted, exact values).
+
+Every query named in oracle_sql.json must have written an output directory:
+a query that threw in Verify leaves none and counts as a failure here."""
 import glob
 import json
 import math
@@ -42,9 +45,13 @@ def main(sf_dir: str, out_dir: str) -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    written = {d.rstrip("/").split("/")[-1] for d in glob.glob(f"{out_dir}/*/")}
     fails = 0
-    for qdir in sorted(glob.glob(f"{out_dir}/*/")):
-        name = qdir.rstrip("/").split("/")[-1]
+    for name in sorted(set(oracle) - written):
+        print(f"  {name:24s} MISSING OUTPUT (no directory written)")
+        fails += 1
+    for name in sorted(written):
+        qdir = f"{out_dir}/{name}"
         spark_df = pd.concat(
             [pd.read_parquet(f) for f in glob.glob(f"{qdir}/*.parquet")],
             ignore_index=True) if glob.glob(f"{qdir}/*.parquet") else pd.DataFrame()
