@@ -268,8 +268,7 @@ object Jobs {
           graft.core.KillPoint(s"job.resync.$stage.start")
           stage.split(":", 2) match {
             case Array("map", t) =>
-              val df = IncrementalRun.mapTable(pipeline, t, sources,
-                empty = false)
+              val df = IncrementalRun.mapTable(pipeline, t, sources)
               commitStage(stage, idx, Seq(
                 (t, df, MrSchema.Key),
                 (BucketedRun.indexName(t),

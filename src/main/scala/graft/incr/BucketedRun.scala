@@ -1,6 +1,6 @@
 package graft.incr
 
-import graft.core.{MrSchema, Pipeline}
+import graft.core.{MapSpec, MrSchema, Pipeline, ReduceSpec}
 import graft.ops.{MapOp, ReduceOp}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -8,11 +8,23 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Bucket-scoped incremental batches over a [[BucketedStateStore]] —
-  * [[IncrementalRun.applyChanges]] with the same ordering guarantees
-  * (delete-old-then-rewrite, A13 tombstone + deferred purge, A15 version
-  * barrier, A12 newest-wins inside a batch) but O(touched buckets) IO per
-  * batch instead of a full-state rewrite.
+/** A5/A6-incremental + A12/A13/A15 — apply one batch of changes to the
+  * derived tables in a [[BucketedStateStore]], keeping them exactly equal to
+  * [[IncrementalRun.recompute]] over the new source snapshots, with
+  * O(touched buckets) IO per batch.
+  *
+  * The reference processes one notification at a time with a REST round
+  * trip per step (processor.py:99-227); here a batch is DataFrame algebra
+  * over the touched buckets, shared by both batch shapes (the driver path
+  * and [[applyChangesDistributed]]), with the reference's ordering
+  * guarantees:
+  *   - delete-old-then-rewrite for updated sources (processor.py:120-131);
+  *   - DELETE tombstones map rows first so the reduce still sees the key,
+  *     physical purge only after the key's reduce succeeded (A13,
+  *     processor.py:133-148, 406-409);
+  *   - a key whose live map rows span handler versions is postponed — its
+  *     old reduce output stays (A15, processor.py:173-177);
+  *   - newest-wins per id inside a batch (A12).
   *
   * How a batch stays scoped:
   *   1. the change batch itself is CONTROL DATA — it is collected to the
@@ -306,6 +318,102 @@ object BucketedRun {
     (((h % numBuckets) + numBuckets) % numBuckets).toInt
   }
 
+  // ---- frame algebra shared by the driver and distributed batch paths ----
+  // Each path builds its own batch-side frames (broadcast local relations on
+  // the driver path, distributed frames on the other) and passes them here.
+
+  /** Monotonic revision merge into the [[SeqTable]]: `batch` holds
+    * (source_type, source_id, seq). A late or out-of-order notification
+    * carrying an OLDER seq for an id must never regress the stored revision
+    * (a stale CAS expectation would then wrongly succeed) — on conflict keep
+    * greatest(stored, batch), never last-write-wins. */
+  private def mergeSeqs(old: DataFrame, batch: DataFrame): DataFrame = {
+    val bump = batch.select(col(SourceType).as("__t"),
+      col(SourceId).as("__i"), col("seq").as("__s"))
+    val kept = old.join(bump,
+      col(SourceType) === col("__t") && col(SourceId) === col("__i"),
+      "left")
+      .withColumn("seq", when(col("__s").isNotNull,
+        greatest(col("seq"), col("__s"))).otherwise(col("seq")))
+      .drop("__t", "__i", "__s")
+    val fresh = batch.join(old.select(col(SourceType).as("__t"),
+        col(SourceId).as("__i")),
+      col(SourceType) === col("__t") && col(SourceId) === col("__i"),
+      "left_anti")
+    kept.unionByName(fresh)
+  }
+
+  /** Delete-old-then-rewrite of one map spec's rows: `source`'s rows of
+    * upserted ids (`upsertIds`, column `_mr_source_id`) are replaced by
+    * `fresh`; rows of deleted ids (`deleteIds`, column `__del`) become A13
+    * tombstones so the reduce still sees their keys. Rows of other source
+    * types feeding the same target pass through untouched. */
+  private def rewriteMapRows(old: DataFrame, source: String, upsertIds: DataFrame,
+                             deleteIds: DataFrame, fresh: DataFrame): DataFrame = {
+    val mine = old.filter(col(SourceType) === source)
+    val others = old.filter(col(SourceType) =!= source)
+    val marked = mine.join(upsertIds, Seq(SourceId), "left_anti")
+      .join(deleteIds, col(SourceId) === col("__del"), "left")
+      .withColumn(Deleted, col(Deleted) || col("__del").isNotNull)
+      .drop("__del")
+    others.unionByName(marked.unionByName(fresh, allowMissingColumns = true),
+      allowMissingColumns = true)
+  }
+
+  /** Index maintenance: upserted ids get their fresh (type, id, key)
+    * triples; deleted ids KEEP theirs while the tombstone lives (a later
+    * re-create must find the tombstone's bucket to remove it) — the A13
+    * purge drops them together with their rows. */
+  private def rewriteIndex(old: DataFrame, source: String, upsertIds: DataFrame,
+                           freshTriples: DataFrame): DataFrame = {
+    val mineIdx = old.filter(col(SourceType) === source)
+    val othersIdx = old.filter(col(SourceType) =!= source)
+    othersIdx.unionByName(
+      mineIdx.join(upsertIds, Seq(SourceId), "left_anti").unionByName(freshTriples))
+  }
+
+  /** A15 version barrier: keys with a live row whose version differs from
+    * its source's handler version — postponed, their old output stays. */
+  private def staleKeys(mapRows: DataFrame, specs: Seq[MapSpec]): DataFrame = {
+    val stale = specs.map(s =>
+      col(SourceType) === s.source && col(Version) =!= s.version
+    ).reduce(_ || _)
+    mapRows.filter(!col(Deleted) && stale).select(col(Key)).distinct()
+  }
+
+  /** Replace the `ready` keys of a reduce table wholesale with their
+    * re-reduce over `mapRows`; an empty group yields no row = output
+    * delete. */
+  private def replaceReady(old: DataFrame, mapRows: DataFrame, ready: DataFrame,
+                           rspec: ReduceSpec, batchTimestampNs: Long): DataFrame = {
+    val recomputed = ReduceOp(rspec, mapRows.join(ready, Seq(Key), "left_semi"),
+      batchTimestampNs)
+    old.join(ready, Seq(Key), "left_anti")
+      .unionByName(recomputed, allowMissingColumns = true)
+  }
+
+  /** A13 deferred purge, step 1: exact (type, id, key) triples of the
+    * tombstones whose key reduced. Triples, not bare ids: a flatmap id can
+    * keep live rows under other keys whose index entries must survive. */
+  private def purgedTriples(mapRows: DataFrame, ready: DataFrame): DataFrame =
+    mapRows.filter(col(Deleted))
+      .join(ready, Seq(Key), "left_semi")
+      .select(col(SourceType), col(SourceId), col(Key)).distinct()
+
+  /** A13 deferred purge, step 2: physical delete of reduced tombstones. */
+  private def purgeTombstones(mapRows: DataFrame, ready: DataFrame): DataFrame =
+    mapRows.join(ready.withColumnRenamed(Key, "__k"),
+      col(Key) === col("__k") && col(Deleted), "left_anti")
+
+  /** A13 deferred purge, step 3: drop the purged triples (`__pt`, `__pi`,
+    * `__pk`) from the index — a stale entry would spuriously re-reduce the
+    * purged key on the id's next unrelated change. */
+  private def purgeIndex(old: DataFrame, triples: DataFrame): DataFrame =
+    old.join(triples,
+      col(SourceType) === col("__pt") && col(SourceId) === col("__pi") &&
+        col(Key) === col("__pk"),
+      "left_anti")
+
   /** One change batch against the store; commits on success.
     *
     * The small-batch contract is ENFORCED here, not assumed: the collect is
@@ -427,25 +535,7 @@ object BucketedRun {
         if (batchAll.nonEmpty) {
           val upd = batchAll.map(c => (c.resourceType, c.resourceId, c.seq))
           val updDf = broadcast(upd.toDF(SourceType, SourceId, "seq"))
-          // monotonic merge: a late/out-of-order notification carrying an
-          // OLDER seq for an id must never regress the stored revision (a
-          // stale CAS expectation would then wrongly succeed) — on conflict
-          // keep greatest(stored, batch), never last-write-wins
-          seqTbl.update { old =>
-            val bump = updDf.select(col(SourceType).as("__t"),
-              col(SourceId).as("__i"), col("seq").as("__s"))
-            val kept = old.join(bump,
-              col(SourceType) === col("__t") && col(SourceId) === col("__i"),
-              "left")
-              .withColumn("seq", when(col("__s").isNotNull,
-                greatest(col("seq"), col("__s"))).otherwise(col("seq")))
-              .drop("__t", "__i", "__s")
-            val fresh = updDf.join(old.select(col(SourceType).as("__t"),
-                col(SourceId).as("__i")),
-              col(SourceType) === col("__t") && col(SourceId) === col("__i"),
-              "left_anti")
-            kept.unionByName(fresh)
-          }
+          seqTbl.update(mergeSeqs(_, updDf))
         }
       }
 
@@ -509,34 +599,17 @@ object BucketedRun {
           // algebra touches nothing outside `spec.source` rows of batch ids,
           // and all of those live in the scoped buckets (via the index)
           val upsertDf = localCol(SourceId, upserts)
-          tbl.update { old =>
-            val mine = old.filter(col(SourceType) === spec.source)
-            val others = old.filter(col(SourceType) =!= spec.source)
-            val withoutUpserted = mine.join(upsertDf, Seq(SourceId), "left_anti")
-            val marked = withoutUpserted
-              .join(localCol("__del", deletes), col(SourceId) === col("__del"), "left")
-              .withColumn(Deleted, col(Deleted) || col("__del").isNotNull)
-              .drop("__del")
-            others.unionByName(marked.unionByName(fresh, allowMissingColumns = true),
-              allowMissingColumns = true)
-          }
+          tbl.update(rewriteMapRows(_, spec.source, upsertDf,
+            localCol("__del", deletes), fresh))
 
-          // 5. index maintenance: upserted ids get their fresh (id -> key)
-          // entries; deleted ids KEEP theirs while the tombstone lives (a
-          // later re-create must find the tombstone's bucket to remove it);
-          // the purge step below drops them together with their rows.
-          // SKIPPED when the upserted ids' triples are unchanged (the
-          // steady-state update batch: same ids map to the same keys) —
-          // the committed index buckets already hold exactly this content.
+          // 5. index maintenance, SKIPPED when the upserted ids' triples
+          // are unchanged (the steady-state update batch: same ids map to
+          // the same keys) — the committed index buckets already hold
+          // exactly this content.
           val upsertSet = upserts.toSet
           val idxDirty = newT != oldT.filter(t => upsertSet.contains(t._2))
-          if (idxDirty) idx.update { old =>
-            val mineIdx = old.filter(col(SourceType) === spec.source)
-            val othersIdx = old.filter(col(SourceType) =!= spec.source)
-            othersIdx.unionByName(
-              mineIdx.join(upsertDf, Seq(SourceId), "left_anti")
-                .unionByName(fresh.select(col(SourceType), col(SourceId), col(Key)).distinct()))
-          }
+          if (idxDirty) idx.update(rewriteIndex(_, spec.source, upsertDf,
+            fresh.select(col(SourceType), col(SourceId), col(Key)).distinct()))
 
           if (pipeline.reducersBySource.contains(spec.target))
             affectedKeys += spec.target ->
@@ -552,58 +625,32 @@ object BucketedRun {
         for (rspec <- pipeline.reducersBySource(mapTarget)) {
           val table = tbl.rows
 
-          // A15 version barrier over the scoped rows (exact: every row of a
-          // touched key is inside the scoped buckets). Steady state has zero
+          // A15 version barrier over the scoped rows. Steady state has zero
           // stale rows, so this collect is empty and cheap.
-          val stale = specs.map(s =>
-            col(SourceType) === s.source && col(Version) =!= s.version
-          ).reduce(_ || _)
-          val staleKeys = table.filter(!col(Deleted) && stale)
-            .select(col(Key)).distinct().as[String].collect().toSet
-          val ready: Set[String] = keys -- staleKeys
+          val stale = staleKeys(table, specs).as[String].collect().toSet
+          val ready: Set[String] = keys -- stale
           val readyKeys = localCol(Key, ready.toSeq)
 
-          val scopedLive = table.join(readyKeys, Seq(Key), "left_semi")
-          val recomputed = ReduceOp(rspec, scopedLive, batchTimestampNs)
-
-          // replace ready keys wholesale inside the reduce table's touched
-          // buckets; an empty group yields no row = output delete
           val rtbl = scopedTable(rspec.target, Key)
           rtbl.widen(bucketsOfKeys(ready))
-          rtbl.update { old =>
-            old.join(readyKeys, Seq(Key), "left_anti")
-              .unionByName(recomputed, allowMissingColumns = true)
-          }
+          rtbl.update(replaceReady(_, table, readyKeys, rspec, batchTimestampNs))
 
           // A13 deferred purge of reduced tombstones — rows AND their index
-          // entries (a stale index entry would spuriously re-reduce the
-          // purged key on the id's next unrelated change). Exact (type, id,
-          // key) triples, not bare ids: a flatmap id can keep live rows
-          // under other keys whose entries must survive. Skipped when the
-          // batch contains no delete: fresh tombstones only appear in
-          // delete batches; the one corner this defers is a barrier-
-          // postponed tombstone from an EARLIER batch whose key reduces in
-          // a delete-free batch — it is then benign garbage (excluded from
-          // every fold) until the next delete-bearing batch purges it.
+          // entries. Skipped when the batch contains no delete: fresh
+          // tombstones only appear in delete batches; the one corner this
+          // defers is a barrier-postponed tombstone from an EARLIER batch
+          // whose key reduces in a delete-free batch — it is then benign
+          // garbage (excluded from every fold) until the next delete-bearing
+          // batch purges it.
           if (anyDeletes) {
-            val purged = tbl.rows.filter(col(Deleted))
-              .join(readyKeys, Seq(Key), "left_semi")
-              .select(col(SourceType), col(SourceId), col(Key)).distinct()
+            val purged = purgedTriples(tbl.rows, readyKeys)
               .as[(String, String, String)].collect()
-            tbl.update { rows =>
-              rows.join(readyKeys.withColumnRenamed(Key, "__k"),
-                col(Key) === col("__k") && col(Deleted), "left_anti")
-            }
+            tbl.update(purgeTombstones(_, readyKeys))
             if (purged.nonEmpty) {
               val idx = scopedTable(indexName(mapTarget), SourceId)
               idx.widen(bucketsOfKeys(purged.map(_._2)))
               val purgedDf = broadcast(purged.toSeq.toDF("__pt", "__pi", "__pk"))
-              idx.update { old =>
-                old.join(purgedDf,
-                  col(SourceType) === col("__pt") && col(SourceId) === col("__pi") &&
-                    col(Key) === col("__pk"),
-                  "left_anti")
-              }
+              idx.update(purgeIndex(_, purgedDf))
             }
           }
         }
@@ -672,25 +719,8 @@ object BucketedRun {
       if (store.tableNames.contains(SeqTable)) {
         val seqTbl = scopedTable(SeqTable, SourceId)
         seqTbl.widen(bucketsOf(newest, "resourceId"))
-        // monotonic merge, same contract as the driver path: greatest of
-        // (stored, batch) per id — an out-of-order backlog replay must not
-        // regress revisions a CAS writer already observed
-        seqTbl.update { old =>
-          val bump = newest.select(col("resourceType").as("__t"),
-            col("resourceId").as("__i"), col("seq").as("__s"))
-          val kept = old.join(bump,
-            col(SourceType) === col("__t") && col(SourceId) === col("__i"),
-            "left")
-            .withColumn("seq", when(col("__s").isNotNull,
-              greatest(col("seq"), col("__s"))).otherwise(col("seq")))
-            .drop("__t", "__i", "__s")
-          val fresh = newest.select(col("resourceType").as(SourceType),
-              col("resourceId").as(SourceId), col("seq"))
-            .join(old.select(col(SourceType).as("__t"), col(SourceId).as("__i")),
-              col(SourceType) === col("__t") && col(SourceId) === col("__i"),
-              "left_anti")
-          kept.unionByName(fresh)
-        }
+        seqTbl.update(mergeSeqs(_, newest.select(col("resourceType").as(SourceType),
+          col("resourceId").as(SourceId), col("seq"))))
       }
 
       // (mapTarget -> touched keys frame), merged across specs
@@ -731,32 +761,14 @@ object BucketedRun {
           tbl.widen(bucketsOf(touchedKeys, Key))
 
           // 4. delete-old-then-rewrite within the scoped buckets only —
-          // identical algebra to the driver path, joins instead of isin
-          tbl.update { old =>
-            val mine = old.filter(col(SourceType) === spec.source)
-            val others = old.filter(col(SourceType) =!= spec.source)
-            val withoutUpserted = mine.join(upserts, Seq(SourceId), "left_anti")
-            val marked = withoutUpserted
-              .join(deletes.select(col(SourceId).as("__del")),
-                col(SourceId) === col("__del"), "left")
-              .withColumn(Deleted, col(Deleted) || col("__del").isNotNull)
-              .drop("__del")
-            others.unionByName(
-              marked.unionByName(fresh, allowMissingColumns = true),
-              allowMissingColumns = true)
-          }
+          // the driver path's algebra over distributed id frames
+          tbl.update(rewriteMapRows(_, spec.source, upserts,
+            deletes.select(col(SourceId).as("__del")), fresh))
 
-          // 5. index maintenance: fresh entries for upserted ids; deleted
-          // ids KEEP theirs while the tombstone lives (purge drops both).
-          // The driver path's triple-set elision is a driver-side compare —
-          // here the stage-time fingerprint provides the same write elision.
-          idx.update { old =>
-            val mineIdx = old.filter(col(SourceType) === spec.source)
-            val othersIdx = old.filter(col(SourceType) =!= spec.source)
-            othersIdx.unionByName(
-              mineIdx.join(upserts, Seq(SourceId), "left_anti")
-                .unionByName(freshTriples))
-          }
+          // 5. index maintenance. The driver path's triple-set elision is a
+          // driver-side compare — here the stage-time fingerprint provides
+          // the same write elision.
+          idx.update(rewriteIndex(_, spec.source, upserts, freshTriples))
 
           if (pipeline.reducersBySource.contains(spec.target))
             affectedKeys += spec.target -> (affectedKeys.get(spec.target) match {
@@ -776,49 +788,24 @@ object BucketedRun {
         for (rspec <- pipeline.reducersBySource(mapTarget)) {
           val table = tbl.rows
 
-          // A15 version barrier over the scoped rows (exact: every row of a
-          // touched key is inside the scoped buckets)
-          val stale = specs.map(s =>
-            col(SourceType) === s.source && col(Version) =!= s.version
-          ).reduce(_ || _)
-          val staleKeys = table.filter(!col(Deleted) && stale)
-            .select(col(Key)).distinct()
-          val ready = tracked(keysDf.join(staleKeys, Seq(Key), "left_anti"))
+          // A15 version barrier over the scoped rows
+          val ready = tracked(keysDf.join(staleKeys(table, specs), Seq(Key), "left_anti"))
 
-          val scopedLive = table.join(ready, Seq(Key), "left_semi")
-          val recomputed = ReduceOp(rspec, scopedLive, batchTimestampNs)
-
-          // replace ready keys wholesale inside the reduce table's touched
-          // buckets; an empty group yields no row = output delete
           val rtbl = scopedTable(rspec.target, Key)
           rtbl.widen(bucketsOf(ready, Key))
-          rtbl.update { old =>
-            old.join(ready, Seq(Key), "left_anti")
-              .unionByName(recomputed, allowMissingColumns = true)
-          }
+          rtbl.update(replaceReady(_, table, ready, rspec, batchTimestampNs))
 
-          // A13 deferred purge of reduced tombstones — rows AND their index
-          // entries, exact (type, id, key) triples (same corner-case
+          // A13 deferred purge of reduced tombstones (same corner-case
           // reasoning as the driver path)
           if (anyDeletes) {
-            val purged = tracked(tbl.rows.filter(col(Deleted))
-              .join(ready, Seq(Key), "left_semi")
-              .select(col(SourceType), col(SourceId), col(Key)).distinct())
-            tbl.update { rows =>
-              rows.join(ready.withColumnRenamed(Key, "__k"),
-                col(Key) === col("__k") && col(Deleted), "left_anti")
-            }
+            val purged = tracked(purgedTriples(tbl.rows, ready))
+            tbl.update(purgeTombstones(_, ready))
             val purgedBuckets = bucketsOf(purged, SourceId)
             if (purgedBuckets.nonEmpty) {
               val idx = scopedTable(indexName(mapTarget), SourceId)
               idx.widen(purgedBuckets)
-              idx.update { old =>
-                old.join(purged.select(col(SourceType).as("__pt"),
-                    col(SourceId).as("__pi"), col(Key).as("__pk")),
-                  col(SourceType) === col("__pt") &&
-                    col(SourceId) === col("__pi") && col(Key) === col("__pk"),
-                  "left_anti")
-              }
+              idx.update(purgeIndex(_, purged.select(col(SourceType).as("__pt"),
+                col(SourceId).as("__pi"), col(Key).as("__pk"))))
             }
           }
         }
@@ -832,15 +819,6 @@ object BucketedRun {
     } finally {
       scope.releaseAll()
     }
-  }
-
-  /** Streaming `foreachBatch` body against the store (drain-then-exit or
-    * forever mode, mirroring [[StreamingEngine]]). */
-  def foreachBatch(pipeline: Pipeline, sources: IncrementalRun.Sources,
-                   store: BucketedStateStore): (Dataset[Change], Long) => Unit = {
-    (ds: Dataset[Change], id: Long) =>
-      applyChanges(pipeline, sources, store, ds, batchTimestampNs = id + 1, batchId = id + 1)
-      ()
   }
 
   /** The 404-analogue for the point-addressed blob surface: the addressed

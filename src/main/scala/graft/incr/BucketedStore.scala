@@ -17,14 +17,14 @@ import scala.jdk.CollectionConverters._
 
 /** Hash-bucketed durable state — the A3/A4 sink shaped for 100 TB.
   *
-  * [[ParquetStateStore]] rewrites EVERY derived table whole per batch: at
-  * scale a 10-row change batch rewrites terabytes. Here each table is
+  * A store that rewrites every derived table whole per batch would, at
+  * scale, rewrite terabytes for a 10-row change batch. Here each table is
   * persisted as `numBuckets` hash buckets of its key column, and a batch
   * replaces only the buckets that contain touched keys — the file-level
-  * MERGE a Delta/Iceberg sink performs, built on the same
-  * write-new-then-swap-manifest protocol the whole-table store used
-  * (crash mid-write leaves the previous consistent snapshot committed;
-  * reference analogue: deferred tombstone purge, processor.py:141-148).
+  * MERGE a Delta/Iceberg sink performs, on a write-new-then-swap-manifest
+  * protocol (crash mid-write leaves the previous consistent snapshot
+  * committed; reference analogue: deferred tombstone purge,
+  * processor.py:141-148).
   *
   * Reads ([[table]], [[readBuckets]], [[tableAsOf]]) resolve their files
   * from the manifest: one driver `Files.list` per referenced directory,

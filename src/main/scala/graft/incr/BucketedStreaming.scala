@@ -4,12 +4,66 @@ import graft.core.Pipeline
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** A18 + A3/A4 unified — the durable production engine: per-notification
-  * retry/bisection/dead-letter semantics (shared [[RetryLedger]], identical
-  * to [[StreamingEngine]]'s) over the touched-bucket store, with the ledger
+/** Listener wiring for the streaming engine: maps Spark's
+  * idle/progress/termination events onto a retry drain WITHOUT blocking the
+  * shared listener bus — callbacks only flag-and-dispatch to a dedicated
+  * daemon thread, so a long micro-batch holding the engine's batch lock can
+  * never stall progress/idle delivery for every other query on the session. */
+private[incr] final class DrainDispatch(drain: () => Unit) {
+  private val queued = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val exec = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
+    val t = new Thread(r, "graft-retry-drain"); t.setDaemon(true); t
+  })
+
+  /** Coalescing request: at most one drain queued behind the running one.
+    * After [[shutdown]] (query terminated) a late request runs inline —
+    * only the rare restart-after-terminate path pays that. */
+  def request(): Unit =
+    if (queued.compareAndSet(false, true))
+      try exec.submit(new Runnable {
+        def run(): Unit = { queued.set(false); drain() }
+      })
+      catch {
+        case _: java.util.concurrent.RejectedExecutionException =>
+          queued.set(false); drain()
+      }
+
+  /** Stop the drain thread once its query is done — engines are per-query;
+    * without this a long-lived host leaks one daemon thread (and the
+    * engine it pins) per engine start. Queued work still runs. */
+  def shutdown(): Unit = exec.shutdown()
+
+  def listenerFor(q: StreamingQuery, spark: SparkSession)
+      : org.apache.spark.sql.streaming.StreamingQueryListener = {
+    val self = this
+    new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.id == q.id) self.request()
+      override def onQueryIdle(e: QueryIdleEvent): Unit =
+        if (e.id == q.id) self.request()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == q.id) {
+          self.request() // final drain is async — hosts needing a
+          // synchronous last drain call drainDue() after awaitTermination
+          spark.streams.removeListener(this)
+          self.shutdown() // already-queued final drain still runs
+        }
+    }
+  }
+}
+
+/** A2/A23 + A18 + A3/A4 — the incremental engine as a Structured Streaming
+  * query: per-notification retry/bisection/dead-letter semantics
+  * ([[RetryLedger]]) over the touched-bucket store, with the ledger
   * persisted INSIDE the store's atomic manifest commit.
   *
-  * What that buys over the in-memory engine:
+  * The reference's worker loop (worker.py:66-89: drain notifications → map
+  * phase → grouped reduce phase → 0.5 s idle sleep, `-f` forever mode) maps
+  * onto one streaming query whose `foreachBatch` body is [[processBatch]].
+  *
+  * What the store gives the engine:
   *   - per-batch IO is O(touched buckets), never a full-state rewrite
   *     ([[BucketedRun]]);
   *   - a crash mid-backoff resumes its schedule: the ledger travels with

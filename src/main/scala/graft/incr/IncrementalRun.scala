@@ -1,239 +1,51 @@
 package graft.incr
 
-import graft.core.{MapSpec, MrSchema, Pipeline}
-import graft.ops.{DedupOp, MapOp, ReduceOp}
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import graft.core.Pipeline
+import graft.ops.{MapOp, ReduceOp}
+import org.apache.spark.sql.DataFrame
 
 /** Derived-table state: one DataFrame per map / reduce target. */
 final case class MrState(tables: Map[String, DataFrame]) {
   def apply(name: String): DataFrame = tables(name)
   def updated(name: String, df: DataFrame): MrState = MrState(tables + (name -> df))
-  /** Materialize and truncate lineage — call between batches so plans do not
-    * grow unboundedly (the cluster equivalent is the parquet/Delta rewrite a
-    * `foreachBatch` sink performs anyway). */
-  def checkpointed: MrState = MrState(tables.map { case (k, v) => k -> v.localCheckpoint() })
 }
 
-/** A5/A6-incremental + A12/A13/A15 — apply one batch of changes to the
-  * derived tables, keeping them exactly equal to a full recompute over the
-  * new source snapshots (the invariant the reference's whole notification
-  * loop exists to maintain, processor.py:99-227).
+/** The recompute oracle: every derived table built from scratch over the
+  * current source snapshots — map each source, union per map target, reduce
+  * per reduce target.
   *
-  * The reference processes one notification at a time with a REST round trip
-  * per step; here a batch of changes is pure DataFrame algebra — set
-  * subtraction by provenance, re-map of only the touched ids, and per-key
-  * re-reduce of only the touched keys. This is exactly the body you would
-  * run inside `foreachBatch` on a real cluster (see [[StreamingEngine]]),
-  * where each step is a key-partitioned shuffle instead of a point lookup.
+  * The incremental engine ([[BucketedRun]], driven by
+  * [[BucketedStreamingEngine]]) exists to keep the stored tables exactly
+  * equal to this recompute after every batch (the invariant the reference's
+  * whole notification loop maintains, processor.py:99-227). So this object
+  * is the ground truth that specs and `perfbench` compare the store against,
+  * the cold-start and backlog-resync primitive ([[BucketedRun.initialize]],
+  * [[BucketedRun.resyncFull]], A16/A17), and the staged resync of `Jobs`.
   *
-  * Ordering guarantees preserved from the reference:
-  *   - delete-old-then-rewrite for updated sources (processor.py:120-131);
-  *   - DELETE tombstones map rows first so the reduce still sees the key,
-  *     physical purge only after the key's reduce succeeded (A13,
-  *     processor.py:133-148, 406-409);
-  *   - a key whose live map rows span handler versions is postponed — its
-  *     old reduce output stays (A15, processor.py:173-177);
-  *   - duplicate reduce rows collapse newest-wins (A12).
-  *
-  * Provenance matching is on (`_mr_source_type`, `_mr_source_id`) — a map
-  * target fed by several sources (the `join()` shape) may see the same id
-  * value from different tables.
+  * Provenance columns (`_mr_source_type`, `_mr_source_id`) ride along on
+  * every map row, so a map target fed by several sources (the `join()`
+  * shape) keeps each row's origin.
   */
 object IncrementalRun {
-  import MrSchema._
-
   /** Current-state reader for source tables (the reference re-fetches by id
     * on every notification — clients/qvarn.py:111-137). */
   type Sources = String => DataFrame
 
+  /** One map target over the current sources: the union of its map specs. */
   private[graft] def mapTable(pipeline: Pipeline, target: String,
-                              sources: Sources, empty: Boolean): DataFrame =
-    pipeline.mapSpecsByTarget(target).map { m =>
-      val src = if (empty) sources(m.source).limit(0) else sources(m.source)
-      MapOp(m, src)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-
-  /** Empty derived tables with the schemas the pipeline will produce. */
-  def emptyState(pipeline: Pipeline, sources: Sources): MrState = {
-    val mapTables = pipeline.mapTargets.map { t =>
-      t -> mapTable(pipeline, t, sources, empty = true)
-    }.toMap
-    val reduceTables = pipeline.reduces.map { r =>
-      r.target -> ReduceOp(r, mapTables(r.source))
-    }.toMap
-    MrState(mapTables ++ reduceTables)
-  }
+                              sources: Sources): DataFrame =
+    pipeline.mapSpecsByTarget(target).map(m => MapOp(m, sources(m.source)))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Full batch recompute over current snapshots — the ground truth the
     * incremental path must equal (and the A16/A17 resync primitive). */
   def recompute(pipeline: Pipeline, sources: Sources, timestampNs: Long = 0L): MrState = {
     val mapTables = pipeline.mapTargets.map { t =>
-      t -> mapTable(pipeline, t, sources, empty = false)
+      t -> mapTable(pipeline, t, sources)
     }.toMap
     val reduceTables = pipeline.reduces.map { r =>
       r.target -> ReduceOp(r, mapTables(r.source), timestampNs)
     }.toMap
     MrState(mapTables ++ reduceTables)
-  }
-
-  def applyChanges(
-      pipeline: Pipeline,
-      sources: Sources,
-      state: MrState,
-      changes: Dataset[Change],
-      batchTimestampNs: Long): MrState = {
-
-    // Last change per id wins inside one batch (at-least-once feed).
-    val lastPerId = DedupOp.newestWins(changes.toDF(), Seq("resourceType", "resourceId"), "seq")
-      .select(col("resourceType"), col("resourceId"), col("change"))
-      .cache()
-    val tempCaches = scala.collection.mutable.ListBuffer[DataFrame](lastPerId)
-    val changedTargets = scala.collection.mutable.LinkedHashSet.empty[String]
-    // batch-sized work: AQE's per-stage job splitting and a wide shuffle
-    // only add fixed overhead to the handful of eager actions below. The
-    // settings are session-global — BatchConf serializes tuned bodies.
-    val spark = changes.sparkSession
-    graft.core.BatchConf.withBatchTuning(spark) {
-    // try/finally: StreamingEngine retries a failed batch, so an exception
-    // escaping mid-batch must not leak this attempt's cached frames
-    try {
-
-    var st = state
-    // affected (reduceSource mapTarget -> touched-keys frame)
-    var affectedKeys = Map.empty[String, DataFrame]
-
-    for ((sourceName, specs) <- pipeline.mappersBySource.toSeq.sortBy(_._1)) {
-      val batch = lastPerId.filter(col("resourceType") === sourceName)
-      for (spec <- specs) {
-        // Cache the incoming and outgoing map tables: the batch algebra
-        // references each several times (provenance split, touched-key scan,
-        // version barrier, scoped reduce, tombstone purge), and without a
-        // cache every reference re-executes the table's full plan — for a
-        // cold recompute()-fed state that multiplies the source scan ~6×.
-        val oldTable = st(spec.target).cache()
-        tempCaches += oldTable
-        val (newTable0, touched) = applyMapBatch(spec, sources, oldTable, batch)
-        val newTable = newTable0.cache()
-        tempCaches += newTable
-        st = st.updated(spec.target, newTable)
-        changedTargets += spec.target
-        if (pipeline.reducersBySource.contains(spec.target)) {
-          val merged = affectedKeys.get(spec.target) match {
-            case Some(k) => k.unionByName(touched).distinct()
-            case None => touched
-          }
-          affectedKeys += spec.target -> merged
-        }
-      }
-    }
-
-    for ((mapTarget, keys) <- affectedKeys.toSeq.sortBy(_._1)) {
-      val specs = pipeline.mapSpecsByTarget(mapTarget)
-      val keysDf = keys.distinct().cache()
-      tempCaches += keysDf
-      for (rspec <- pipeline.reducersBySource(mapTarget)) {
-        val table = st(mapTarget)
-
-        // A15 version barrier: postpone keys with any live row whose version
-        // differs from its (per-source) handler version. Ready = touched
-        // minus stale-keyed: the stale filter normally selects ZERO rows
-        // (steady state is all-current versions), so this costs one cheap
-        // scan + an anti-join against an empty side — unlike grouping every
-        // touched row. Fully-deleted keys have no live rows at all, so they
-        // are never subtracted and stay ready (their output row must go away).
-        val stale = specs.map(s =>
-          col(SourceType) === s.source && col(Version) =!= s.version
-        ).reduce(_ || _)
-        val staleKeys = table.filter(!col(Deleted) && stale).select(Key).distinct()
-        val readyKeys = keysDf.join(staleKeys, Seq(Key), "left_anti").cache()
-        tempCaches += readyKeys
-
-        val scoped = table.join(readyKeys, Seq(Key), "left_semi")
-        val recomputed = ReduceOp(rspec, scoped, batchTimestampNs)
-
-        // Replace ready keys wholesale; empty groups yield no row = delete.
-        // untouchedOld (old minus readyKeys) and recomputed (readyKeys only)
-        // are disjoint by construction, so a plain union preserves the
-        // one-row-per-key invariant — no A12 window pass needed here. The
-        // reference dedups on read because its store can transiently hold
-        // two rows per key after a crash (processor.py:181-189); our state
-        // snapshots swap atomically (StateStore), so recovery re-enters
-        // with a clean table. DedupOp stays available for ingesting
-        // externally-produced tables that lack the invariant.
-        val untouchedOld = st(rspec.target).join(readyKeys, Seq(Key), "left_anti")
-        val merged = untouchedOld.unionByName(recomputed, allowMissingColumns = true)
-        st = st.updated(rspec.target, merged)
-        changedTargets += rspec.target
-
-        // A13 deferred purge: physical delete of tombstones whose key reduced.
-        val afterPurge = st(mapTarget)
-          .join(readyKeys.withColumnRenamed(Key, "__k"),
-            col(Key) === col("__k") && col(Deleted), "left_anti")
-        st = st.updated(mapTarget, afterPurge)
-      }
-    }
-
-    // Truncate lineage of every table this batch rewrote (eager
-    // localCheckpoint = the local stand-in for the parquet/Delta write a
-    // cluster `foreachBatch` sink performs). Without this, each batch's
-    // output plan embeds the previous state's plan several times over, so
-    // chained batches grow the logical plan MULTIPLICATIVELY — Catalyst
-    // analysis alone goes super-linear and a steady-state streaming job
-    // eventually spends hours planning a kilobyte of data. Untouched tables
-    // keep their (already truncated) plans.
-    val truncated = changedTargets.foldLeft(st) { (s, t) =>
-      s.updated(t, s(t).localCheckpoint())
-    }
-    truncated
-    } finally {
-      tempCaches.foreach(_.unpersist(blocking = false))
-    }
-    }
-  }
-
-  /** Apply one batch of changes for one map spec: delete-old by provenance,
-    * tombstone deletes, append re-mapped rows for upserts. Rows this spec did
-    * not produce (other source types feeding the same target) pass through
-    * untouched. Returns the new map table and the frame of touched
-    * `_mr_key`s. */
-  private def applyMapBatch(
-      spec: MapSpec,
-      sources: Sources,
-      oldTable: DataFrame,
-      batch: DataFrame): (DataFrame, DataFrame) = {
-
-    val mine = oldTable.filter(col(SourceType) === spec.source)
-    val others = oldTable.filter(col(SourceType) =!= spec.source)
-
-    val upsertIds = batch.filter(col("change") =!= Change.Deleted)
-      .select(col("resourceId").as(SourceId))
-    val deleteIds = batch.filter(col("change") === Change.Deleted)
-      .select(col("resourceId").as(SourceId))
-
-    val src = sources(spec.source)
-    val touchedSrc = src.join(
-      upsertIds.withColumnRenamed(SourceId, "__id"),
-      col(spec.idCol).cast("string") === col("__id"), "left_semi")
-    val fresh = MapOp(spec, touchedSrc)
-
-    val oldKeysTouched = mine
-      .join(batch.select(col("resourceId").as("__id")),
-        col(SourceId) === col("__id"), "left_semi")
-      .select(Key)
-
-    // delete-old-then-rewrite for upserts; tombstone rows of deleted sources
-    // (A13) so the reduce phase still sees their keys:
-    val withoutUpserted = mine.join(upsertIds, Seq(SourceId), "left_anti")
-    val marked = withoutUpserted
-      .join(deleteIds.withColumnRenamed(SourceId, "__del"),
-        col(SourceId) === col("__del"), "left")
-      .withColumn(Deleted, col(Deleted) || col("__del").isNotNull)
-      .drop("__del")
-
-    val newTable = others.unionByName(marked.unionByName(fresh, allowMissingColumns = true),
-      allowMissingColumns = true)
-    val touchedKeys = oldKeysTouched.unionByName(fresh.select(Key)).distinct()
-    (newTable, touchedKeys)
   }
 }

@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   * reference's notification record (resource type / id / change kind /
   * sequence) plus the A18 state machine's bookkeeping — how many retries a
   * pending change has burned, when it first failed, and when its backoff
-  * gate opens ([[RetryLedger.due]]'s exact arithmetic). Dead-lettered
-  * changes appear with `state = 'dead'` and null retry bookkeeping (the
-  * ledger keeps only the change itself for the audit log).
+  * gate opens ([[RetryLedger.gateOpensAtMs]], the instant [[RetryLedger.due]]
+  * opens it). Dead-lettered changes appear with `state = 'dead'` and null
+  * retry bookkeeping (the ledger keeps only the change itself for the audit
+  * log).
   *
   * The frame is driver-built from control data: the ledger is by
   * construction small (it holds FAILURES, not the feed — the reference's
@@ -36,16 +37,11 @@ object Notifications {
     StructField("first_failed_at_ms", LongType),
     StructField("gate_opens_at_ms", LongType)))
 
-  /** One row per pending retry and per dead letter. `backoffMs` must match
-    * the ledger's schedule (gate = first failure + backoff(min(retries,
-    * last))) — the default mirrors [[RetryLedger]]'s 0.25 s / 1.5 s. */
-  def frame(spark: SparkSession, pending: Seq[FailedChange], dead: Seq[Change],
-            backoffMs: Seq[Long] = Seq(250L, 1500L)): DataFrame = {
+  /** One row per pending retry and per dead letter. */
+  def frame(spark: SparkSession, pending: Seq[FailedChange], dead: Seq[Change]): DataFrame = {
     val pendRows = pending.map { f =>
-      val gate = f.firstFailedAtMs +
-        backoffMs(math.min(f.retries, backoffMs.size - 1))
       Row("pending", f.change.seq, f.change.change, f.change.resourceType,
-        f.change.resourceId, f.retries, f.firstFailedAtMs, gate)
+        f.change.resourceId, f.retries, f.firstFailedAtMs, RetryLedger.gateOpensAtMs(f))
     }
     val deadRows = dead.map { c =>
       Row("dead", c.seq, c.change, c.resourceType, c.resourceId, null, null, null)
@@ -58,16 +54,14 @@ object Notifications {
     * Worker's `--queue` listing needs no SparkSession for a read-only
     * peek at a store's committed ledger. Dead letters print `-` for the
     * retry bookkeeping the ledger does not keep. */
-  def lines(pending: Seq[FailedChange], dead: Seq[Change],
-            backoffMs: Seq[Long] = Seq(250L, 1500L)): Seq[String] = {
+  def lines(pending: Seq[FailedChange], dead: Seq[Change]): Seq[String] = {
     val header = "state\tseq\tchange\tresource_type\tresource_id\t" +
       "retries\tfirst_failed_at_ms\tgate_opens_at_ms"
     val p = pending.sortBy(f => (f.change.resourceType, f.change.resourceId, f.change.seq))
       .map { f =>
-        val gate = f.firstFailedAtMs +
-          backoffMs(math.min(f.retries, backoffMs.size - 1))
         s"pending\t${f.change.seq}\t${f.change.change}\t${f.change.resourceType}\t" +
-          s"${f.change.resourceId}\t${f.retries}\t${f.firstFailedAtMs}\t$gate"
+          s"${f.change.resourceId}\t${f.retries}\t${f.firstFailedAtMs}\t" +
+          RetryLedger.gateOpensAtMs(f)
       }
     val d = dead.sortBy(c => (c.resourceType, c.resourceId, c.seq))
       .map(c => s"dead\t${c.seq}\t${c.change}\t${c.resourceType}\t${c.resourceId}\t-\t-\t-")

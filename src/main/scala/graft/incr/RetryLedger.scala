@@ -3,15 +3,19 @@ package graft.incr
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
-/** A18 — the per-notification retry/dead-letter state machine, extracted so
-  * the in-memory engine ([[StreamingEngine]]) and the durable bucketed engine
-  * ([[BucketedStreamingEngine]]) share one set of semantics (reference:
-  * processor.py:261-304):
+/** A failed notification awaiting retry — the reference's FailedNotification
+  * (processor.py:37-44): `retries` counts retry attempts used so far and
+  * `firstFailedAtMs` anchors the backoff gates (the reference keeps the
+  * original processed_at across retries, processor.py:273-280). */
+final case class FailedChange(change: Change, retries: Int, firstFailedAtMs: Long)
+
+/** A18 — the per-notification retry/dead-letter state machine of
+  * [[BucketedStreamingEngine]] (reference: processor.py:261-304):
   *
   *   - failures are tracked PER NOTIFICATION, never per batch;
-  *   - a failed record retries no sooner than `backoffMs(n)` after its FIRST
-  *     failure (0.25 s, then 1.5 s — the reference keeps the original
-  *     processed_at across retries, processor.py:273-280);
+  *   - a failed record retries no sooner than [[RetryLedger.gateOpensAtMs]]
+  *     (0.25 s, then 1.5 s after its FIRST failure — the reference keeps the
+  *     original processed_at across retries, processor.py:273-280);
   *   - after the `maxRetries`-th retry fails the record drops to the
   *     dead-letter log; `maxRetries = 0` dead-letters on the FIRST failure
   *     (no retry attempts at all — 0 and 1 are distinct settings);
@@ -19,15 +23,15 @@ import java.util.Base64
   *     processor.py:255-259), including any OLDER pending change of the same
   *     id (replaying a superseded notification would undo newer state).
   *
-  * The ledger serializes to a line-oriented payload so engines can persist it
-  * inside their store commit and resume the backoff schedule after a crash —
-  * the durability the reference gets from failed notifications staying
-  * unacked in its queue (processor.py:437-471).
+  * The ledger serializes to a line-oriented payload so the engine can
+  * persist it inside its store commit and resume the backoff schedule
+  * after a crash — the durability the reference gets from failed
+  * notifications staying unacked in its queue (processor.py:437-471).
   *
-  * Not thread-safe: callers serialize batches (both engines hold a batch
+  * Not thread-safe: callers serialize batches (the engine holds a batch
   * lock around [[record]]).
   */
-final class RetryLedger(val maxRetries: Int, backoffMs: Seq[Long] = Seq(250L, 1500L)) {
+final class RetryLedger(val maxRetries: Int) {
 
   private var pendingMap: Map[(String, String, Long), FailedChange] = Map.empty
   private var dead: List[Change] = Nil
@@ -44,9 +48,8 @@ final class RetryLedger(val maxRetries: Int, backoffMs: Seq[Long] = Seq(250L, 15
   def clearPending(): Unit = pendingMap = Map.empty
 
   /** Failures whose backoff gate is open at `now`. */
-  def due(now: Long): Seq[FailedChange] = pendingMap.values.filter { f =>
-    now - f.firstFailedAtMs >= backoffMs(math.min(f.retries, backoffMs.size - 1))
-  }.toSeq
+  def due(now: Long): Seq[FailedChange] =
+    pendingMap.values.filter(f => now >= RetryLedger.gateOpensAtMs(f)).toSeq
 
   /** Post-batch bookkeeping. `work` is everything attempted this batch
     * (due retries ++ fresh changes), `failed` the subset that failed, `due`
@@ -124,9 +127,17 @@ final class RetryLedger(val maxRetries: Int, backoffMs: Seq[Long] = Seq(250L, 15
 }
 
 object RetryLedger {
-  def restore(maxRetries: Int, payload: String,
-              backoffMs: Seq[Long] = Seq(250L, 1500L)): RetryLedger = {
-    val l = new RetryLedger(maxRetries, backoffMs)
+  /** Delay from a record's first failure to the gate of its n-th retry; the
+    * last entry repeats for any further retry. */
+  private val BackoffMs: Seq[Long] = Seq(250L, 1500L)
+
+  /** The instant `f`'s next retry may run — [[RetryLedger.due]]'s gate and
+    * the `gate_opens_at_ms` that [[Notifications]] publishes. */
+  def gateOpensAtMs(f: FailedChange): Long =
+    f.firstFailedAtMs + BackoffMs(math.min(f.retries, BackoffMs.size - 1))
+
+  def restore(maxRetries: Int, payload: String): RetryLedger = {
+    val l = new RetryLedger(maxRetries)
     l.load(payload)
     l
   }

@@ -134,6 +134,8 @@ object Flac {
       ((acc >>> nAcc) & 1L).toInt
     }
     def readBits(n: Int): Long = {
+      // fill() guarantees 57 buffered bits; the mask below also breaks at 64
+      require(n <= 57, s"readBits($n): at most 57 bits per read")
       if (n == 0) return 0L
       if (nAcc < n) {
         fill()

@@ -893,9 +893,15 @@ object Jpeg {
     // length <= 8, else 0; lookSym(p) = its decoded symbol
     private val lookLen = new Array[Byte](256)
     private val lookSym = new Array[Byte](256)
+    // a corrupt DHT (truncated values, counts past the code space) fails
+    // with a message here, never with an index error in the loop below
+    require(vals.length >= bits.sum,
+      s"DHT: ${bits.sum} codes but only ${vals.length} symbol values")
     locally {
       var code = 0; var vi = 0; var l = 1
       while (l <= 16) {
+        require(code + bits(l - 1) <= (1 << l),
+          s"DHT: ${bits(l - 1)} codes of length $l exceed the code space")
         valPtr(l) = vi
         minCode(l) = code
         var c = 0

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Bucketed incremental state: same semantics as [[IncrementalRun]] (the
-  * spec-level ground truth is always a full recompute), but per-batch IO
+/** Bucketed incremental state: equal to [[IncrementalRun.recompute]] (the
+  * spec-level ground truth is always a full recompute), with per-batch IO
   * scoped to touched buckets — untouched buckets must be carried by
   * reference (identical directory), and no state frame may be
   * shuffle-joined (plan audit: no SortMergeJoin). */
@@ -221,28 +221,6 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
       changes((1, Change.Updated, "a")), 1L, batchId = 1)
     // k1 holds b at a stale version → postponed: old output survives
     assert(reduced(store) == Map("k1" -> 1.0, "k2" -> 5.0))
-  }
-
-  test("A2→A3 end to end: a change stream drains into the bucketed store") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val store = newStore()
-    var data = srcDf(("a", "k1", 1.0), ("b", "k2", 2.0))
-    val sources: IncrementalRun.Sources = _ => data
-    BucketedRun.initialize(pipeline, sources, store)
-
-    val mem = MemoryStream[Change](spark)
-    data = srcDf(("a", "k1", 5.0), ("b", "k2", 2.0), ("c", "k1", 3.0))
-    mem.addData(Change(1, Change.Updated, "src", "a"), Change(2, Change.Created, "src", "c"))
-    val q = mem.toDS().writeStream
-      .outputMode("append")
-      .foreachBatch(BucketedRun.foreachBatch(pipeline, sources, store))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    assert(reduced(store) == Map("k1" -> 8.0, "k2" -> 2.0))
-    // the durable snapshot survives a reopen
-    assert(reduced(new BucketedStateStore(store.root, store.numBuckets))
-      == Map("k1" -> 8.0, "k2" -> 2.0))
   }
 
   test("vacuum spares directories staged for a batch beyond the committed pointer") {

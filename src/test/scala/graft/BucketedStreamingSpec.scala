@@ -7,10 +7,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A18 unified with the durable bucketed sink: the same retry semantics as
-  * [[StreamingEngine]] (shared RetryLedger) running [[BucketedRun]] batches,
-  * with the ledger persisted inside the store's atomic manifest commit so a
-  * crash mid-backoff resumes its schedule (VERDICT r2 items 1-3). */
+/** A2/A23 + A18 with the durable bucketed sink: the [[RetryLedger]] retry
+  * semantics running [[BucketedRun]] batches, with the ledger persisted
+  * inside the store's atomic manifest commit so a crash mid-backoff resumes
+  * its schedule. */
 class BucketedStreamingSpec extends AnyFunSuite with SparkTestBase {
   import MrSchema._
   import spark.implicits._
@@ -71,6 +71,13 @@ class BucketedStreamingSpec extends AnyFunSuite with SparkTestBase {
     engine.processBatch(Seq.empty, streamBatchId = 3)
     assert(engine.pending.head.retries == 1)
 
+    // the queryable notification queue reflects the live ledger: one
+    // pending row whose gate is first-failure + backoff(1) = 0 + 1500
+    val nq = engine.notifications(spark).collect()
+    assert(nq.length == 1)
+    assert(nq.head.getString(0) == "pending" && nq.head.getString(4) == "p")
+    assert(nq.head.getInt(5) == 1 && nq.head.getLong(7) == 1500L)
+
     // second retry fails -> dead-letter; state unchanged
     now = 1600
     engine.processBatch(Seq.empty, streamBatchId = 4)
@@ -97,6 +104,42 @@ class BucketedStreamingSpec extends AnyFunSuite with SparkTestBase {
     engine.processBatch(Seq.empty, streamBatchId = 1)
     assert(engine.pending.isEmpty && engine.deadLetters.isEmpty)
     assert(reduced(store) == Map("k1" -> 7.0))
+  }
+
+  test("A18/bucketed: a newer success supersedes an older pending failure") {
+    @volatile var now = 0L
+    // the poison map fn fails while v < 0; id p starts poisoned
+    var data = Seq(("p", "k1", -1.0)).toDF("id", "k", "v")
+    val sources: IncrementalRun.Sources = _ => data
+    val store = newStore()
+    BucketedRun.initialize(poisonPipeline, _ =>
+      Seq(("p", "k1", 1.0)).toDF("id", "k", "v"), store)
+    val engine = new BucketedStreamingEngine(spark, poisonPipeline, sources, store,
+      maxRetries = 2, clock = () => now)
+
+    // seq=1 fails -> pending
+    engine.processBatch(Seq(Change(1, Change.Updated, "src", "p")), streamBatchId = 0)
+    assert(engine.pending.size == 1)
+
+    // the source heals and a NEWER change (seq=2) for the same id succeeds
+    // on the driver path BEFORE seq=1's retry gate opens: the stale pending
+    // entry must die with it — replaying seq=1 later may not undo newer state
+    data = Seq(("p", "k1", 42.0)).toDF("id", "k", "v")
+    now = 100 // seq=1 not yet due
+    engine.processBatch(Seq(Change(2, Change.Updated, "src", "p")), streamBatchId = 1)
+    assert(engine.pending.isEmpty && engine.deadLetters.isEmpty)
+    assert(reduced(store) == Map("k1" -> 42.0))
+
+    // nothing left to replay at the next drains, and the cleared ledger is
+    // what a restarted engine resumes from
+    now = 2000
+    engine.drainDue()
+    assert(engine.pending.isEmpty && engine.deadLetters.isEmpty)
+    assert(reduced(store) == Map("k1" -> 42.0))
+    val engine2 = new BucketedStreamingEngine(spark, poisonPipeline, sources,
+      new BucketedStateStore(store.root, store.numBuckets), maxRetries = 2,
+      clock = () => now)
+    assert(engine2.pending.isEmpty && engine2.deadLetters.isEmpty)
   }
 
   test("crash durability: the retry ledger survives an engine teardown mid-backoff") {

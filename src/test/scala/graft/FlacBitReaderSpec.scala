@@ -111,4 +111,12 @@ class FlacBitReaderSpec extends AnyFunSuite {
     assert(a2.readUnary() == b2.readUnary())
     assert(a2.readBits(3) == b2.readBits(3))
   }
+
+  test("readBits takes at most the 57 bits a refill guarantees") {
+    val blob = Array.fill[Byte](16)(0x5a)
+    val a = new Flac.BitReader(blob, 0)
+    val b = new RefReader(blob, 0)
+    assert(a.readBits(57) == b.readBits(57))
+    intercept[IllegalArgumentException](new Flac.BitReader(blob, 0).readBits(58))
+  }
 }

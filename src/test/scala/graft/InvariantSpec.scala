@@ -2,14 +2,16 @@ package graft
 
 import graft.core._
 import graft.incr._
+import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The invariant the whole engine exists to maintain (SURVEY §5):
-  * applyChanges(state, changes) ≡ recompute(snapshot') for random change
-  * sequences. Raw ScalaCheck (no scalatestplus bridge in the offline cache). */
+  * BucketedRun.applyChanges(store, changes) ≡ recompute(snapshot') for
+  * random change sequences. Raw ScalaCheck (no scalatestplus bridge in the
+  * offline cache). */
 class InvariantSpec extends AnyFunSuite with SparkTestBase {
   import MrSchema._
   import spark.implicits._
@@ -35,15 +37,17 @@ class InvariantSpec extends AnyFunSuite with SparkTestBase {
     if (m.isEmpty) Seq.empty[(String, String, Double)].toDF("id", "k", "v")
     else m.toSeq.map { case (id, (k, v)) => (id, k, v) }.toDF("id", "k", "v")
 
-  private def reducedOf(st: MrState): Map[String, Double] =
-    st("r").select(col(Key), col(Value)).as[(String, Double)].collect().toMap
+  private def reducedOf(df: DataFrame): Map[String, Double] =
+    df.select(col(Key), col(Value)).as[(String, Double)].collect().toMap
 
   test("incremental(state, changes) == recompute(snapshot') on random batches") {
     val prop = Prop.forAll(Gen.listOfN(2, Gen.listOfN(4, genStep))) { batches =>
       var snapshot = Map("id0" -> ("k1", 3.0), "id1" -> ("k2", 4.0))
       var data = toDf(snapshot)
       val sources: IncrementalRun.Sources = _ => data
-      var st = IncrementalRun.recompute(pipeline, sources)
+      val store = new BucketedStateStore(
+        Files.createTempDirectory("graft_invariant").toString, 4)
+      BucketedRun.initialize(pipeline, sources, store)
       var ok = true
       var batchNo = 0L
       for (batch <- batches if ok) {
@@ -58,10 +62,9 @@ class InvariantSpec extends AnyFunSuite with SparkTestBase {
           Change(i.toLong, if (s.op == Change.Deleted) Change.Deleted else Change.Updated,
             "src", s.id)
         }.toDS()
-        // applyChanges truncates changed tables' lineage itself
-        st = IncrementalRun.applyChanges(pipeline, sources, st, cs, batchNo)
-        val expect = reducedOf(IncrementalRun.recompute(pipeline, sources))
-        val got = reducedOf(st)
+        BucketedRun.applyChanges(pipeline, sources, store, cs, batchNo, batchId = batchNo)
+        val expect = reducedOf(IncrementalRun.recompute(pipeline, sources)("r"))
+        val got = reducedOf(store.table(spark, "r"))
         ok = got == expect
       }
       ok

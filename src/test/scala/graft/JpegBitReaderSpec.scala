@@ -134,6 +134,23 @@ class JpegBitReaderSpec extends AnyFunSuite {
     }
   }
 
+  test("a corrupt DHT fails at table construction with a deliberate message") {
+    def fails(bits: Array[Int], vals: Array[Byte]): String =
+      intercept[IllegalArgumentException](new Jpeg.HuffTable(bits, vals)).getMessage
+    // truncated values: 3 codes declared, the segment ended after 2 values
+    val three = Array(0, 3) ++ Array.fill(14)(0)
+    assert(fails(three, Array[Byte](1, 2)).contains("only 2 symbol values"))
+    // Kraft-infeasible counts: three 1-bit codes do not fit in 2 codes
+    val over = Array(3) ++ Array.fill(15)(0)
+    assert(fails(over, Array[Byte](1, 2, 3)).contains("exceed the code space"))
+    // the same overflow past the 8-bit lookahead: one code at each length
+    // 1-8 leaves room for two 9-bit codes, not three
+    val deep = Array.fill(8)(1) ++ Array(3) ++ Array.fill(7)(0)
+    assert(fails(deep, new Array[Byte](11)).contains("3 codes of length 9"))
+    // a full (Kraft-tight) code is still accepted
+    new Jpeg.HuffTable(Array(2) ++ Array.fill(15)(0), Array[Byte](1, 2))
+  }
+
   test("lookahead LUT ≡ canonical walk on random deep tables") {
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 300) {
