@@ -1,16 +1,10 @@
 package graft
+import graft.core.Sessions
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warm-up (scan + shuffle agg + broadcast join) so the first
     // measured query isn't charged session bring-up and JIT
@@ -112,24 +106,6 @@ object Bench {
       pulseFloor = math.min(pulseFloor, p)
       p
     }
-    def cleanup(): Unit = {
-      // incremental queries cache intermediates; drop them so later queries
-      // don't inherit a full block manager (GC thrash skews timings).
-      graft.ops.Caches.release()
-      // System.gc(): localCheckpoint blocks of finished queries are only
-      // reaped by the ContextCleaner once the driver GCs the RDD handles —
-      // without the nudge they accumulate and later runs measure GC debt
-      // (observed 75s vs 9s on the same incremental query).
-      spark.catalog.clearCache()
-      // streaming queries leave loaded state-store providers (plus their
-      // maintenance pool) and terminated-query references behind; across
-      // a 170+-query run they accumulate into measurable drag on later
-      // queries. stop() unloads all providers (lazily restarted on next
-      // use); resetTerminated() drops the query handles.
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      spark.streams.resetTerminated()
-      System.gc()
-    }
     // a query that throws is an ERROR, never a sample: a fast failure timed
     // as a sample would lower the total
     def sampleOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
@@ -139,7 +115,7 @@ object Bench {
         try { fn(spark, sfDir).count(); None }
         catch { case t: Throwable => Some(s"${t.getClass.getName}: ${t.getMessage}") }
       val d = (System.nanoTime() - t0) / 1e9
-      cleanup()
+      Sessions.reset(spark)
       failure.toLeft(d)
     }
     // optional comma-separated subset for targeted profiling runs

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 import org.apache.spark.sql.functions._
 
 /** Recorded realistic-vocabulary bench lane — the per-round companion to
@@ -23,12 +23,7 @@ object BenchZipf {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 30000L
     val vocab = if (args.length > 1) args(1).toInt else 120000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Sessions
 import org.apache.spark.sql.SparkSession
 
 /** Plan-audit harness: `runMain graft.PlanAudit <sfDir> <query,query,…>
@@ -55,44 +56,41 @@ object PlanAudit {
     (plan, exchanges)
   }
 
-  private def cleanup(spark: SparkSession): Unit = {
-    graft.ops.Caches.release()
-    spark.catalog.clearCache()
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    spark.streams.resetTerminated()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1 && args(1).nonEmpty)
       args(1).split(",").toSeq else DefaultQueries
     val outFile = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val out = new StringBuilder
+    // NonFatal only — an OOM must kill the run, not land as a recorded
+    // "AUDIT ERROR" section; a failed query still gets its section, and
+    // the run exits nonzero naming it, so an error section in a recorded
+    // audit never goes unnoticed
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     for (name <- names) {
       val section = try {
         val (plan, exchanges) = audit(spark, sfDir, name)
         s"\n===== PLAN $name =====\nEXCHANGES $name $exchanges\n" +
           plan.take(8000)
       } catch {
-        case e: Throwable => s"\n===== PLAN $name =====\nAUDIT ERROR: ${e.getMessage}"
+        case scala.util.control.NonFatal(e) =>
+          failed += name
+          s"\n===== PLAN $name =====\nAUDIT ERROR: ${e.getMessage}"
       }
       println(section)
       out.append(section).append('\n')
-      cleanup(spark)
+      Sessions.reset(spark)
     }
     outFile.foreach { f =>
       java.nio.file.Files.write(java.nio.file.Paths.get(f),
         out.toString.getBytes("UTF-8"))
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plan-audit] ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Per-query `.explain("formatted")` dump for the optimization-round plan
@@ -13,14 +13,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, namesCsv) = args.take(4)
     val names = namesCsv.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     // NonFatal only — an OOM must kill the run, not land as a fake plan
@@ -41,10 +34,7 @@ object PlanDump {
         java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
         (s"== $name @ $sfDir ==\n" + text).getBytes("UTF-8"))
       println(s"PLANDUMP $name -> $outDir/${name}_$suffix.txt")
-      graft.ops.Caches.release()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      spark.streams.resetTerminated()
+      Sessions.reset(spark)
     }
     spark.stop()
     if (failures > 0) {

@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.Sessions
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time breakdown of a named SparkEntry query: prints every
   * Spark job the query triggers (description, stage count, duration) so a
@@ -12,14 +12,7 @@ object ProbeJobs {
     val sfDir = args(0)
     val name = args(1)
     val rounds = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
@@ -51,11 +44,7 @@ object ProbeJobs {
       Thread.sleep(300)
       println(s"--- $name round $r: total ${f"$total%.2f"} s (n=$n)")
       lines.forEach(l => println(l))
-      graft.ops.Caches.release()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      spark.streams.resetTerminated()
-      System.gc()
+      Sessions.reset(spark)
     }
     spark.stop()
   }

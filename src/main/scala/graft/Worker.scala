@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{IniConfig, PipelineProvider}
+import graft.core.{IniConfig, PipelineProvider, Sessions}
 import graft.incr.{BucketedRun, BucketedStateStore, BucketedStreamingEngine,
   Change, HandlerRegistry, Lease}
 import java.nio.file.{Files, Paths}
@@ -193,13 +193,8 @@ object Worker {
       } else None
 
     val spark = sparkOverride.getOrElse {
-      SparkSession.builder()
-        .master(conf.getOrElse("spark", "master", "local[*]"))
-        .config("spark.sql.shuffle.partitions",
-          conf.getOrElse("spark", "shuffle_partitions", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
+      Sessions.builder(conf.getOrElse("spark", "master", "local[*]"),
+          conf.getLongOrElse("spark", "shuffle_partitions", 32L).toInt)
         // the library's kernels + custom strategies (graft_* functions,
         // KernelSubstitution rewrite, native as-of join) ride the session
         .config("spark.sql.extensions", "graft.functions.GraftExtensions")

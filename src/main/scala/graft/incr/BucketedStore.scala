@@ -41,6 +41,7 @@ import scala.jdk.CollectionConverters._
   *   <root>/_manifest                              committed pointer (atomic swap)
   *   <root>/_manifest.b<batch>                     retained snapshot (time travel)
   *   <root>/<table>/b<batch>_<n>/__b=<k>/part-….parquet   one dir per staged bucket
+  *   <root>/_stream_checkpoint/                    the engine query's checkpoint
   * }}}
   * The manifest maps (table, bucket) -> directory, so untouched buckets are
   * carried forward BY REFERENCE — never copied, never rewritten. `vacuum()`
@@ -57,6 +58,12 @@ final class BucketedStateStore(val root: String, val numBuckets: Int = 32,
   require(numBuckets > 0)
 
   private val manifestPath = Paths.get(root, "_manifest")
+
+  /** The Structured Streaming checkpoint of the engine query that feeds
+    * this store ([[BucketedStreamingEngine.start]]). It is not a table:
+    * [[vacuum]] never touches it. */
+  def streamCheckpoint: String =
+    Paths.get(root, BucketedStateStore.StreamCheckpointDir).toString
 
   /** Snapshot manifest of one committed batch: `_manifest.b<batchId>` in
     * `root`. Because bucket directories are immutable and carried by
@@ -453,7 +460,9 @@ final class BucketedStateStore(val root: String, val numBuckets: Int = 32,
       }
     val rootPath = Paths.get(root)
     if (Files.isDirectory(rootPath)) {
-      listDirs(rootPath).foreach { tdir =>
+      val tableDirs = listDirs(rootPath)
+        .filterNot(_.getFileName.toString == BucketedStateStore.StreamCheckpointDir)
+      tableDirs.foreach { tdir =>
         listDirs(tdir).foreach { sdir =>
           val rel = s"${tdir.getFileName}/${sdir.getFileName}"
           val inFlight = stagedBatchOf(sdir.getFileName.toString).exists(_ > horizon)
@@ -466,6 +475,10 @@ final class BucketedStateStore(val root: String, val numBuckets: Int = 32,
 }
 
 object BucketedStateStore {
+  /** Directory name of [[BucketedStateStore.streamCheckpoint]] under the
+    * root. Matched exactly: index tables are `_`-prefixed too (`_idx_<map>`). */
+  private[incr] val StreamCheckpointDir = "_stream_checkpoint"
+
   /** Hadoop's local-filesystem block size (`fs.local.block.size` default),
     * the value a Spark listing of these files would report. */
   private val LocalBlockSize = 32L << 20

@@ -240,11 +240,21 @@ final class BucketedStreamingEngine(
   /** Start the engine on a change stream — `availableNow=true` is the
     * worker's drain-then-exit mode, false is `-f` forever mode
     * (worker.py:76-89). Retry gates during quiet periods are driven by the
-    * idle/progress listener through a dedicated drain thread. */
+    * idle/progress listener through a dedicated drain thread.
+    *
+    * The query checkpoints into the store's
+    * [[BucketedStateStore.streamCheckpoint]], so a restarted query (the
+    * next Worker run, or a second `start`) resumes its batch numbering and
+    * source offsets where the last one stopped. Without it every query
+    * would number its batches from 0 again, and the engine would drop them
+    * as re-deliveries of batches at or below the committed `stream=`
+    * pointer. The checkpoint lives under the store root, so it and that
+    * pointer are created and removed together. */
   def start(changeStream: Dataset[Change], availableNow: Boolean = true): StreamingQuery = {
     val session = changeStream.sparkSession
     val writer = changeStream.writeStream
       .outputMode("append")
+      .option("checkpointLocation", store.streamCheckpoint)
       .foreachBatch { (ds: Dataset[Change], id: Long) => processBatch(ds, id) }
     val q = (if (availableNow) writer.trigger(Trigger.AvailableNow())
              else writer.trigger(Trigger.ProcessingTime("500 milliseconds")))

@@ -188,8 +188,9 @@ object Curation {
     // probe-side Sort — the exact shape OptimizeSkewedJoin can split. An
     // aggregate straight on __h pipelines into the SortMergeJoin and
     // BLOCKS AQE's skew split permanently (both SMJ children must be bare
-    // shuffle stages; measured in ProbeSkew: a spam key with 5.9M spans
-    // serialized on one reducer with skewSplit=false at any threshold).
+    // shuffle stages; measured by the round-9 skew probe, see PLANS.md: a
+    // spam key with 5.9M spans serialized on one reducer with
+    // skewSplit=false at any threshold).
     // Costs one dup-hash-table-sized shuffle, only paid in the SMJ regime.
     val dupHashes = spans
       .groupBy(col("__h"), pmod(xxhash64(col("__h")), lit(16)).as("__z"))

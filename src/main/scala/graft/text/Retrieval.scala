@@ -1,9 +1,10 @@
 package graft.text
 
 import graft.dedup.DocDedup
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Corpus retrieval and term-weighting over the one-tokenization stream —
   * the lookup side of a training-data pipeline (inspect what's in the
@@ -642,24 +643,29 @@ object Retrieval {
       idCol: String, textCol: String,
       embeddings: DataFrame, vecIdCol: String, vecCol: String,
       kEach: Int, maxQueryTerms: Int): (DataFrame, DataFrame) = {
-    val qtok = probes.select(col(idCol).as("__q"),
-      explode(array_distinct(TextFunctions.tokens(col(textCol)))).as("term"))
-    // ONE driver collect of the control-sized (probe, term) PAIRS — the
-    // same size regime as the probe broadcast both towers already pay —
-    // reused by (a) the df read's bucket+term pruning, (b) bm25 scoring,
-    // and (c) the term-selection input as a LOCAL relation, so the probe
-    // scan + tokenize runs once instead of twice (the df table itself
-    // was once a FULL live-postings scan; the index stores no term
+    // ONE driver collect of the control-sized probe set — one row per
+    // probe with its distinct terms, the same size regime as the probe
+    // broadcast both towers already pay — reused by (a) the df read's
+    // bucket+term pruning, (b) bm25 scoring, (c) the term-selection input
+    // as a LOCAL relation of (probe, term) pairs and (d) the dense tower's
+    // probe ids, so the probe scan + tokenize runs once (the df table
+    // itself was once a FULL live-postings scan; the index stores no term
     // dictionary by design — df for a term lives in its own bucket)
-    val qtokRows = qtok.collect()
-    val termList = {
-      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-      qtokRows.foreach(r => seen += r.getString(1))
-      seen.toSeq
+    val probeTerms = probes.select(col(idCol).as("__q"),
+      array_distinct(TextFunctions.tokens(col(textCol))).as("__terms"))
+    val probeRows = probeTerms.collect()
+    val qtokSchema = StructType(Seq(probeTerms.schema("__q"),
+      StructField("term", StringType,
+        probeTerms.schema("__terms").dataType.asInstanceOf[ArrayType].containsNull)))
+    // a probe with no tokens (null or empty text) has no pairs, exactly
+    // as `explode` would drop it
+    val qtokRows = probeRows.toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).toSeq.flatten.map(t => Row(r.get(0), t))
     }
+    val termList = qtokRows.map(_.getString(1)).distinct
     require(termList.nonEmpty, "no probe terms")
     val qtokLocal = spark.createDataFrame(
-      java.util.Arrays.asList(qtokRows: _*), qtok.schema)
+      java.util.Arrays.asList(qtokRows: _*), qtokSchema)
     val buckets = termList.map(termBucket(_, index.numBuckets)).distinct
     val dfTab = liveRows(spark, index,
       spark.read.parquet(index.postingsDir)
@@ -682,11 +688,11 @@ object Retrieval {
     // dense tower: the probe-id set is control-sized (it already rides a
     // broadcast), so collect it and push an In(vec_id, …) predicate INTO
     // the embeddings scan (guide §6 — pruning must reach the scan) in
-    // place of the former full-scan + broadcast join. Ids come from
-    // `probes` (not the token pairs): a tokenless probe still queries
+    // place of the former full-scan + broadcast join. Ids come from every
+    // probe row (not the token pairs): a tokenless probe still queries
     // the dense tower. Same rows: probe ids are unique, so the inner
     // join was a semi-join
-    val probeIds = probes.select(col(idCol)).collect().map(_.get(0))
+    val probeIds = probeRows.map(_.get(0))
     val qvecs = embeddings
       .filter(col(vecIdCol).isin(probeIds: _*))
       .select(col(vecIdCol), col(vecCol))

@@ -51,7 +51,7 @@ object Unigram {
     * room for REALISTIC inventories (a 10⁵-piece vocab × 10³-char words ≈
     * 10⁸ max rank sum; the original 10⁶ capped |vocab|·len at ~10⁶, which
     * a Zipfian corpus at SentencePiece-scale vocabularies exceeds —
-    * measured in ProbeZipf). Per-word costs stay < 10³·10⁹ ≈ 2⁵⁰, so
+    * measured by the round-8 Zipf scale probe, see PLANS.md). Per-word costs stay < 10³·10⁹ ≈ 2⁵⁰, so
     * corpus-level BIGINT sums keep 13 bits of headroom per 10³ docs. */
   val CostBase = 1000000000L
 

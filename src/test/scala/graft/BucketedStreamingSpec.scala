@@ -255,6 +255,16 @@ class BucketedStreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(engine.pending.isEmpty)
     assert(reduced(new BucketedStateStore(store.root, store.numBuckets))
       == Map("k1" -> 5.0, "k2" -> 8.0))
+
+    // restart: a second query resumes from the store's stream checkpoint,
+    // so the delete arrives as stream batch 1 — not as a fresh batch 0 the
+    // committed `stream=0` pointer would drop as a re-delivery
+    data = Seq(("a", "k1", 5.0)).toDF("id", "k", "v")
+    mem.addData(Change(3, Change.Deleted, "src", "p"))
+    val q2 = engine.start(mem.toDS(), availableNow = true)
+    q2.awaitTermination(60000)
+    assert(reduced(new BucketedStateStore(store.root, store.numBuckets))
+      == Map("k1" -> 5.0))
   }
 
   test("forever mode: the idle listener drains a due retry with no new data") {

@@ -89,10 +89,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       } finally {
         // cleanup must run even when a pin fails, or the leaked caches
         // and streaming state cascade into the remaining pins
-        graft.ops.Caches.release()
-        spark.catalog.clearCache()
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        spark.streams.resetTerminated()
+        graft.core.Sessions.reset(spark)
       }
     }
   }

@@ -349,6 +349,24 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
     assert(pos.toSet == expPos && pos.nonEmpty)
   }
 
+  test("a probe with no tokens still gets its dense-tower neighbours") {
+    val corpus = sf("documents")
+    val dir = java.nio.file.Files.createTempDirectory("graft_hyb0").toString
+    val idx = Retrieval.buildIndex(corpus, "text", "doc_id", dir, numBuckets = 8)
+    val ids = corpus.filter(col("doc_id") % 17 === 0).select("doc_id").as[Long]
+      .collect().sorted
+    val silent = ids.head
+    val probes = corpus.filter(col("doc_id") % 17 === 0)
+      .select(col("doc_id"),
+        when(col("doc_id") === silent, lit(null).cast("string"))
+          .otherwise(col("text")).as("text"))
+    val rows = Retrieval.hybridRrf(spark, idx, probes, "doc_id", "text",
+      sf("embeddings"), "vec_id", "embedding", kEach = 10, kOut = 5)
+      .filter(col("qid") === silent).collect()
+    assert(rows.nonEmpty, "the tokenless probe lost its dense list")
+    assert(rows.forall(_.getAs[Long]("n_lists") == 1L), "no lexical list to fuse")
+  }
+
   test("sourceOverlap counts shared distinct n-grams per unordered pair") {
     // 2-grams: a = {spark table, table scan, table join, join join};
     //          b = {window sort, sort window, spark window, window table,

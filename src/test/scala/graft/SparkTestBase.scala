@@ -14,12 +14,7 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 
 object SparkTestBase {
   // one session for the whole forked test JVM
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = graft.core.Sessions.builder("local[4]", 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 }

@@ -5,6 +5,7 @@ import graft.incr.{BucketedStateStore, Change, Lease}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The handlers config of the worker end-to-end test — resolved by
   * reflection from its fully-qualified name, like the reference's
@@ -115,6 +116,44 @@ class WorkerSpec extends AnyFunSuite with SparkTestBase {
     writeChangeFile(changesDir, "late", Seq(Change(1, Change.Created, "src", "d")))
     assert(Worker.run(Seq("graft.WorkerTestPipeline", "-c", ini), Some(spark)) == 0)
     assert(reduced == Map("k1" -> 3.0, "k2" -> 9.0))
+
+    // run 3, after a NON-empty run: the stream resumes from its checkpoint,
+    // so only the new file is read, as the next stream batch — a restart
+    // that renumbered from 0 would have it dropped as a re-delivery
+    Seq(("e", "k1", 10.0)).toDF("id", "k", "v")
+      .write.mode("append").parquet(srcDir)
+    writeChangeFile(changesDir, "later", Seq(Change(2, Change.Created, "src", "e")))
+    assert(Worker.run(Seq("graft.WorkerTestPipeline", "-c", ini), Some(spark)) == 0)
+    assert(reduced == Map("k1" -> 13.0, "k2" -> 9.0))
+  }
+
+  test("a store vacuum leaves the Worker's stream checkpoint intact") {
+    val (srcDir, changesDir, storeRoot, ini) = setupDirs()
+    Seq(("a", "k1", 1.0)).toDF("id", "k", "v").write.parquet(srcDir)
+    assert(Worker.run(Seq("graft.WorkerTestPipeline", "-c", ini), Some(spark)) == 0)
+    Seq(("b", "k1", 2.0)).toDF("id", "k", "v")
+      .write.mode("append").parquet(srcDir)
+    writeChangeFile(changesDir, "c1", Seq(Change(1, Change.Created, "src", "b")))
+    assert(Worker.run(Seq("graft.WorkerTestPipeline", "-c", ini), Some(spark)) == 0)
+
+    val checkpoint = Paths.get(storeRoot, "_stream_checkpoint")
+    def logEntries(sub: String): Seq[String] = {
+      val s = Files.list(checkpoint.resolve(sub))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      finally s.close()
+    }
+    val before = (logEntries("offsets"), logEntries("commits"))
+    assert(before._2.nonEmpty, "the non-empty run committed a stream batch")
+    new BucketedStateStore(storeRoot, 8).vacuum()
+    assert((logEntries("offsets"), logEntries("commits")) == before)
+
+    // and the next run still resumes: its change is applied, not dropped
+    Seq(("c", "k1", 4.0)).toDF("id", "k", "v")
+      .write.mode("append").parquet(srcDir)
+    writeChangeFile(changesDir, "c2", Seq(Change(2, Change.Created, "src", "c")))
+    assert(Worker.run(Seq("graft.WorkerTestPipeline", "-c", ini), Some(spark)) == 0)
+    assert(new BucketedStateStore(storeRoot, 8).table(spark, "r")
+      .select(col(MrSchema.Value)).as[Double].collect().toSeq == Seq(7.0))
   }
 
   test("a live lease held by another worker exits 1 without touching state") {

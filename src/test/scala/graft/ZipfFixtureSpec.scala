@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every scale factor, where "greedy attains the Viterbi optimum" and
   * "the inventory fills" are trivially true and prove nothing).
   *
-  * ProbeZipf measures the same fixture at 10× (300k docs): the encode
-  * join-back flips BroadcastHashJoin → SortMergeJoin cleanly, the DP cost
+  * The retired round-8 Zipf scale probe (PLANS.md, "Retired probes")
+  * measured the same fixture at 10× (300k docs): the encode join-back flips BroadcastHashJoin → SortMergeJoin cleanly, the DP cost
   * stays on the distinct-word frame, and BM25/minhash scale sublinearly /
   * linearly (PLANS.md round-8 section records the numbers). */
 class ZipfFixtureSpec extends AnyFunSuite with SparkTestBase {
