@@ -1,8 +1,14 @@
 package graft
 import graft.core.Sessions
+import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
+    // optional comma-separated subset for targeted profiling runs; an
+    // unknown name exits 1 before anything runs
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq.distinct)
+    val queryList = only.fold(Registry.all.values.toSeq)(Registry.lookupOrExit)
+      .sortBy(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
@@ -31,12 +37,11 @@ object Bench {
     val PulseRef = 0.21
     val calibPath = {
       import org.apache.spark.sql.functions._
-      val dir = graft.core.TempDirs.register(
-        java.nio.file.Files.createTempDirectory("graft_calib"))
+      val dir = graft.core.TempDirs.create("graft_calib")
       spark.range(0, 8L * 1000 * 1000, 1, 32)
         .select(col("id"), md5(col("id").cast("string")).as("h"))
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
+        .write.mode("overwrite").parquet(dir)
+      dir
     }
     def calibRun(): Double = {
       import org.apache.spark.sql.functions._
@@ -72,12 +77,11 @@ object Bench {
     // digests over 250k rows): CPU-dominated, corpus-independent.
     val pulsePath = {
       import org.apache.spark.sql.functions._
-      val dir = graft.core.TempDirs.register(
-        java.nio.file.Files.createTempDirectory("graft_pulse"))
+      val dir = graft.core.TempDirs.create("graft_pulse")
       spark.range(0, 250L * 1000, 1, 8)
         .select(col("id"), md5(col("id").cast("string")).as("h"))
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
+        .write.mode("overwrite").parquet(dir)
+      dir
     }
     def pulseOnce(): Double = {
       import org.apache.spark.sql.functions._
@@ -118,13 +122,9 @@ object Bench {
       Sessions.reset(spark)
       failure.toLeft(d)
     }
-    // optional comma-separated subset for targeted profiling runs
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     val pulses = new Array[Double](queryList.size + 1)
     pulses(0) = pulse()
-    val sampled0 = queryList.zipWithIndex.map { case ((name, fn), i) =>
+    val sampled0 = queryList.zipWithIndex.map { case (q, i) =>
       // steady-state latency: three samples per query (first run may pay
       // planning and JIT; single-sample numbers vary ±30% on a shared
       // host). min is the headline; the median rides along as variance
@@ -133,10 +133,10 @@ object Bench {
       // (min itself moves) without re-running the suite.
       // (stops at the first failure — the query is an error either way)
       val samples = (0 until 3).foldLeft[Either[String, Vector[Double]]](Right(Vector.empty)) {
-        (acc, _) => acc.flatMap(v => sampleOnce(fn).map(v :+ _))
+        (acc, _) => acc.flatMap(v => sampleOnce(q.build).map(v :+ _))
       }.map(_.sorted)
       pulses(i + 1) = pulse()
-      (name, samples.map(s => (s(0), s(1)))) // (min, median of 3)
+      (q.name, samples.map(s => (s(0), s(1)))) // (min, median of 3)
     }
     // base = run MEDIAN pulse, not min: the min sits at the fast tail of
     // ordinary scheduler jitter, so 1.5x-of-min flags half the run
@@ -151,7 +151,7 @@ object Bench {
     // headline; if not, the flag tells the reader the min is an upper bound
     val resampled = sampled0.zipWithIndex.map { case ((name, r), i) =>
       name -> (if (!contendedIdx(i)) r else r.flatMap { case (mn, md) =>
-        sampleOnce(queryList(i)._2).map(again => (math.min(mn, again), md))
+        sampleOnce(queryList(i).build).map(again => (math.min(mn, again), md))
       })
     }
     val sampled = resampled.collect { case (name, Right((mn, md))) => (name, mn, md) }
@@ -191,10 +191,8 @@ object Bench {
     // per-invocation checkpoint/state-store floor of 1-3 s that is CONSTANT
     // in corpus size) vs everything else — so round-over-round drift in
     // either bucket is attributable at a glance
-    val isStreaming = (n: String) =>
-      n.endsWith("_stream") || n.endsWith("_forever") || n.endsWith("_upsert") ||
-        n.endsWith("_sessions_state") || n == "events_dedup_stream"
-    val streamingSub = results.collect { case (n, v) if isStreaming(n) => v }.sum
+    val streaming = queryList.filter(_.streaming).map(_.name).toSet
+    val streamingSub = results.collect { case (n, v) if streaming(n) => v }.sum
     // variance metadata: med_total - value (sum of per-query median-min
     // gaps) is the run's own noise floor; a round-over-round total drift
     // smaller than this gap is jitter, not regression

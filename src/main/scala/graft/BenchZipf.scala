@@ -48,8 +48,7 @@ object BenchZipf {
       out.get
     }
 
-    val dir = graft.core.TempDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_benchzipf")).toString
+    val dir = graft.core.TempDirs.create("graft_benchzipf")
     once("gen_write") {
       ZipfCorpus.corpus(spark, nDocs, vocab)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")

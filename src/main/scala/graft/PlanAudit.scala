@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Sessions
+import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 
 /** Plan-audit harness: `runMain graft.PlanAudit <sfDir> <query,query,…>
@@ -20,7 +21,7 @@ object PlanAudit {
   /** Default audit set: a representative slice of each plan family
     * (agg, search, dedup/LSH, ANN, retrieval, tokenizer, graph, store,
     * multimodal, packing, mixing) — every name is a real
-    * [[SparkEntry.queries]] key. */
+    * registered query name. */
   val DefaultQueries: Seq[String] = Seq(
     "a6_reduce_sum", "a10_join_report", "b3_range", "b9_sort_limit",
     "dedup_exact", "dedup_minhash", "dedup_simhash", "decon_overlap",
@@ -48,7 +49,7 @@ object PlanAudit {
     * not a semantic: any change in either direction is worth a look. */
   def audit(spark: SparkSession, sfDir: String,
             name: String): (String, Int) = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
+    val df = Registry.lookup(Seq(name)).head.build(spark, sfDir)
     df.collect() // drive AQE so the final plan is the adapted one
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
@@ -60,6 +61,7 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1 && args(1).nonEmpty)
       args(1).split(",").toSeq else DefaultQueries
+    Registry.lookupOrExit(names) // an unknown name exits 1 before anything runs
     val outFile = if (args.length > 2) Some(args(2)) else None
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Sessions
+import graft.queries.Registry
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Per-query `.explain("formatted")` dump for the optimization-round plan
@@ -12,7 +13,7 @@ import org.apache.spark.sql.execution.FormattedMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, namesCsv) = args.take(4)
-    val names = namesCsv.split(",").toSeq
+    val selected = Registry.lookupOrExit(namesCsv.split(",").toSeq)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
@@ -20,9 +21,9 @@ object PlanDump {
     // record; any per-query failure makes the exit nonzero so a plan
     // audit can't mistake "PLAN ERROR" artifacts for captured plans
     var failures = 0
-    for (name <- names) {
+    for (q <- selected; name = q.name) {
       val text = try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = q.build(spark, sfDir)
         df.collect() // drive AQE to the final plan
         df.queryExecution.explainString(FormattedMode)
       } catch {
@@ -38,7 +39,7 @@ object PlanDump {
     }
     spark.stop()
     if (failures > 0) {
-      System.err.println(s"PLANDUMP FAILURES: $failures of ${names.size}")
+      System.err.println(s"PLANDUMP FAILURES: $failures of ${selected.size}")
       sys.exit(1)
     }
   }

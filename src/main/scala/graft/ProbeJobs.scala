@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Sessions
+import graft.queries.Registry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Per-JOB wall-time breakdown of a named SparkEntry query: prints every
@@ -10,7 +11,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name = args(1)
+    val query = Registry.lookupOrExit(Seq(args(1))).head
+    val name = query.name
     val rounds = if (args.length > 2) args(2).toInt else 2
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
@@ -38,7 +40,7 @@ object ProbeJobs {
     (0 until rounds).foreach { r =>
       lines.clear()
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      val n = query.build(spark, sfDir).count()
       val total = (System.nanoTime() - t0) / 1e9
       // listener events drain asynchronously; give the bus a beat
       Thread.sleep(300)

@@ -1,5 +1,6 @@
 package graft
 import graft.core.Sessions
+import graft.queries.Registry
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
@@ -10,18 +11,20 @@ object Verify {
     // 3rd arg (builder-local iteration only): comma-separated query-name
     // filter; the driver always runs the full 2-arg form
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // (an unknown name exits 1 before anything runs)
+    val selected =
+      if (args.length > 2) Registry.lookupOrExit(args(2).split(",").toSeq.distinct)
+      else Registry.all.values.toSeq
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed += name
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        failed += q.name
       }
       Sessions.reset(spark)
     }

@@ -21,6 +21,11 @@ object TempDirs {
   /** Register `p` for recursive deletion at JVM exit; returns `p`. */
   def register(p: Path): Path = { dirs.add(p); p }
 
+  /** A fresh temp directory named `prefix…`, registered for deletion at
+    * JVM exit; returns its path. */
+  def create(prefix: String): String =
+    register(Files.createTempDirectory(prefix)).toString
+
   /** Recursively delete `p` if it exists — THE one copy of the walk/
     * reverse-order/delete routine (index compaction, store vacuum and
     * stream staging all need it; a behavior fix lands once). */

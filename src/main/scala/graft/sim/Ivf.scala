@@ -369,8 +369,7 @@ object Ivf {
     * frame still reads from it, so it cannot be deleted eagerly). */
   def topK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
            k: Int, nCells: Int = 16, nProbe: Int = 4, iters: Int = 2): DataFrame = {
-    val dir = graft.core.TempDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_ivf")).toString
+    val dir = graft.core.TempDirs.create("graft_ivf")
     probe(buildIndex(corpus, idCol, vecCol, dir, nCells, iters),
       queries, idCol, vecCol, k, nProbe)
   }
