@@ -41,16 +41,19 @@ object BatchConf {
     }
   }
 
-  /** Run `body` with AQE off and `shufflePartitions` static shuffle width,
+  /** Static shuffle width of a tuned body. */
+  private val ShufflePartitions = 8
+
+  /** Run `body` with AQE off and [[ShufflePartitions]] static shuffle width,
     * restoring the previous settings afterwards. Reentrant per thread. */
-  def withBatchTuning[T](spark: SparkSession, shufflePartitions: Int = 8)(body: => T): T =
+  def withBatchTuning[T](spark: SparkSession)(body: => T): T =
     lockFor(spark).synchronized {
       val aqeKey = "spark.sql.adaptive.enabled"
       val shufKey = "spark.sql.shuffle.partitions"
       val aqePrev = spark.conf.get(aqeKey, "true")
       val shufPrev = spark.conf.get(shufKey)
       spark.conf.set(aqeKey, "false")
-      spark.conf.set(shufKey, shufflePartitions.toString)
+      spark.conf.set(shufKey, ShufflePartitions.toString)
       try body
       finally {
         spark.conf.set(aqeKey, aqePrev)

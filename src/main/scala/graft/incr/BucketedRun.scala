@@ -2,7 +2,7 @@ package graft.incr
 
 import graft.core.{MapSpec, MrSchema, Pipeline, ReduceSpec}
 import graft.ops.{MapOp, ReduceOp}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -15,9 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The reference processes one notification at a time with a REST round
   * trip per step (processor.py:99-227); here a batch is DataFrame algebra
-  * over the touched buckets, shared by both batch shapes (the driver path
-  * and [[applyChangesDistributed]]), with the reference's ordering
-  * guarantees:
+  * over the touched buckets, with the reference's ordering guarantees:
   *   - delete-old-then-rewrite for updated sources (processor.py:120-131);
   *   - DELETE tombstones map rows first so the reduce still sees the key,
   *     physical purge only after the key's reduce succeeded (A13,
@@ -29,11 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * How a batch stays scoped:
   *   1. the change batch itself is CONTROL DATA — it is collected to the
   *     driver exactly like the reference drains its notification queue one
-  *     listener poll at a time (processor.py:437-461). A batch is small by
-  *     contract (a backlog beyond memory is what resync A16/A17 is for);
-  *     holding it locally lets every bucket set be computed without a
-  *     Spark job and every id/key predicate ship as a local-relation
-  *     broadcast;
+  *     listener poll at a time (processor.py:437-461). A batch holds at
+  *     most [[MaxCollectedBatch]] changes: [[BucketedStreamingEngine]]
+  *     drains a larger backlog as a sequence of such batches. Holding it
+  *     locally lets every bucket set be computed without a Spark job and
+  *     every id/key predicate ship as a local-relation broadcast;
   *   2. a per-map-table SECONDARY INDEX `(source_type, source_id, key)`,
   *      bucketed by source id, answers "which keys did these changed ids
   *      produce" by reading only the index buckets of the batch's ids —
@@ -48,11 +46,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *      stale keys outside the touched set cannot affect readiness.
   *
   * Shuffle story at 100 TB: every batch-side frame (ids, touched keys,
-  * ready keys) is a broadcast local relation, so STATE rows are never
+  * ready keys) is a broadcast local relation of at most
+  * [[MaxCollectedBatch]] changes' worth of rows, so STATE rows are never
   * shuffle-joined — the only exchanges in a batch plan are over batch-sized
   * data (the re-reduce of touched keys' rows and the bucketed staging
-  * write). The per-batch plans are captured in the returned [[BatchReport]]
-  * so tests can assert no SortMergeJoin ever touches a state-side frame.
+  * write). A backlog keeps this shape: it arrives as bounded batches, never
+  * as one large one. The per-batch plans are captured in the returned
+  * [[BatchReport]] so tests can assert no SortMergeJoin ever touches a
+  * state-side frame.
   *
   * Per batch this runs a fixed, small number of Spark jobs: one touched-key
   * collect per map spec, one stale-key collect per reduce target, a purge
@@ -82,20 +83,14 @@ object BucketedRun {
       s"$t/$i: expected seq $e, found $a" }.mkString("; "))
 
   /** Per-table staging summary: which buckets were replaced, with the
-    * executed plan of the staged content (for plan-audit assertions).
-    * `resync = true` marks a batch that exceeded the small-batch contract
-    * and was diverted to the full-recompute path (staged map empty — every
-    * bucket of every table was replaced through [[resyncFull]]). */
+    * executed plan of the staged content (for plan-audit assertions). */
   final case class StagedTable(buckets: Set[Int], plan: String)
-  final case class BatchReport(staged: Map[String, StagedTable], resync: Boolean = false)
+  final case class BatchReport(staged: Map[String, StagedTable])
 
-  /** Ceiling on the driver-collected change batch (see [[applyChanges]]'s
-    * Dataset overload): below it a batch is notification-sized control data
-    * and gets the driver path's local-relation broadcasts and AQE-off batch
-    * tuning; above it the batch is a backlog and diverts to
-    * [[applyChangesDistributed]] — the same scoped-bucket algebra with the
-    * batch kept as a DataFrame, so the driver never holds backlog rows and
-    * IO still tracks touched buckets (no full-recompute cliff). */
+  /** Ceiling on one driver-collected change batch. A stream batch above it
+    * is a backlog, and [[BucketedStreamingEngine]] drains it as a sequence
+    * of batches of at most this many changes, so the driver never holds
+    * more than O(this) change rows. */
   val MaxCollectedBatch: Int = 100000
 
   /** Cold start: full recompute, then write every table (+ index) bucketed.
@@ -149,18 +144,14 @@ object BucketedRun {
     } finally cached.values.foreach(_.unpersist(blocking = false))
   }
 
-  /** Backlog divert target (A16/A17 applied to the store): replace the whole
-    * state with a fresh recompute over current source snapshots, committed
-    * as `batchId`. A backlog batch carries no information a recompute does
-    * not — the engine re-fetches current source state per id anyway, so one
-    * scan of each source strictly dominates per-id scoped IO at backlog
-    * sizes. */
+  /** Full resync (A16/A17 applied to the store): replace the whole state
+    * with a fresh recompute over current source snapshots, committed as
+    * `batchId` — the Worker's handler-version resync. A replayed `batchId`
+    * at or below the committed pointer is a no-op. */
   def resyncFull(pipeline: Pipeline, sources: IncrementalRun.Sources,
-                 store: BucketedStateStore, batchId: Long): BatchReport = {
-    if (store.committedBatch.exists(_ >= batchId)) return BatchReport(Map.empty)
-    initialize(pipeline, sources, store, batchId)
-    BatchReport(Map.empty, resync = true)
-  }
+                 store: BucketedStateStore, batchId: Long): Unit =
+    if (!store.committedBatch.exists(_ >= batchId))
+      initialize(pipeline, sources, store, batchId)
 
   /** Heal [[BucketedStateStore.fsck]] damage: recompute the derivation
     * from current sources (ONE scan per source — the same cost argument as
@@ -200,9 +191,9 @@ object BucketedRun {
     damaged
   }
 
-  /** Batch-lifetime machinery shared by the driver-collected and the
-    * distributed batch paths: tracked temp caches, the scoped-table view
-    * with write-elision fingerprints, and the concurrent staging epilogue. */
+  /** Batch-lifetime machinery of [[applyChanges]]: tracked temp caches, the
+    * scoped-table view with write-elision fingerprints, and the concurrent
+    * staging epilogue. */
   private final class BatchScope(val spark: org.apache.spark.sql.SparkSession,
                                  store: BucketedStateStore, batchId: Long) {
     val tempCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -318,9 +309,9 @@ object BucketedRun {
     (((h % numBuckets) + numBuckets) % numBuckets).toInt
   }
 
-  // ---- frame algebra shared by the driver and distributed batch paths ----
-  // Each path builds its own batch-side frames (broadcast local relations on
-  // the driver path, distributed frames on the other) and passes them here.
+  // ---- frame algebra of a batch ----
+  // [[applyChanges]] builds the batch-side frames (broadcast local relations)
+  // and passes them here.
 
   /** Monotonic revision merge into the [[SeqTable]]: `batch` holds
     * (source_type, source_id, seq). A late or out-of-order notification
@@ -414,45 +405,9 @@ object BucketedRun {
         col(Key) === col("__pk"),
       "left_anti")
 
-  /** One change batch against the store; commits on success.
-    *
-    * The small-batch contract is ENFORCED here, not assumed: the collect is
-    * bounded at `maxBatchSize + 1` rows, and a batch that exceeds it (a
-    * streaming source replaying a backlog after downtime) diverts to
-    * [[applyChangesDistributed]] instead of blowing the driver — the batch
-    * stays a DataFrame and the scoped-bucket algebra runs distributed.
-    * Normal notification-sized batches are unaffected. */
-  def applyChanges(
-      pipeline: Pipeline,
-      sources: IncrementalRun.Sources,
-      store: BucketedStateStore,
-      changes: Dataset[Change],
-      batchTimestampNs: Long,
-      batchId: Long): BatchReport =
-    applyChanges(pipeline, sources, store, changes, batchTimestampNs, batchId,
-      MaxCollectedBatch)
-
-  /** Same, with an explicit backlog ceiling (specs drive it low). */
-  def applyChanges(
-      pipeline: Pipeline,
-      sources: IncrementalRun.Sources,
-      store: BucketedStateStore,
-      changes: Dataset[Change],
-      batchTimestampNs: Long,
-      batchId: Long,
-      maxBatchSize: Int): BatchReport = {
-    val bounded = changes.limit(maxBatchSize + 1).collect().toSeq
-    if (bounded.size > maxBatchSize)
-      applyChangesDistributed(pipeline, sources, store, changes,
-        batchTimestampNs, batchId)
-    else
-      applyChanges(changes.sparkSession, pipeline, sources, store,
-        bounded, batchTimestampNs, batchId)
-  }
-
-  /** Same, with the batch already in driver memory — the native shape of a
-    * notification-queue poll (the Dataset overload exists for streaming
-    * `foreachBatch`, which hands the batch over as a Dataset).
+  /** One change batch against the store, held in driver memory — the
+    * native shape of a notification-queue poll; commits on success. A
+    * `batchId` at or below the committed manifest pointer is a no-op.
     *
     * `ledger`: opaque engine payload committed atomically WITH the batch
     * (see [[BucketedStateStore.commit]]) — [[BucketedStreamingEngine]]
@@ -667,157 +622,6 @@ object BucketedRun {
     } finally {
       scope.releaseAll()
     }
-    }
-  }
-
-  /** Distributed LARGE-batch path — the same scoped-bucket algebra with the
-    * change batch kept as a DATAFRAME end to end: A12 newest-per-id is an
-    * aggregate, touched keys stay distributed, and every driver collect in
-    * this path returns BUCKET IDS (≤ numBuckets ints), never batch rows.
-    * This removes the backlog cliff where a batch over [[MaxCollectedBatch]]
-    * forced a full-state recompute: a 100k+ backlog after downtime is
-    * routine at scale, and its IO should track touched buckets, not tables.
-    *
-    * Trades vs the driver path (which remains the right shape for
-    * notification-sized batches): batch-side joins shuffle/broadcast as
-    * Catalyst + AQE choose (no guaranteed local-relation broadcast, and no
-    * AQE-off batch tuning — a backlog batch WANTS runtime re-planning);
-    * the index-content elision is left to the stage-time fingerprint; and
-    * per-record retry bisection does not apply — a poison record fails the
-    * whole batch (the engine then falls back to resync). */
-  def applyChangesDistributed(
-      pipeline: Pipeline,
-      sources: IncrementalRun.Sources,
-      store: BucketedStateStore,
-      changes: Dataset[Change],
-      batchTimestampNs: Long,
-      batchId: Long,
-      ledger: Option[String] = None): BatchReport = {
-    val spark = changes.sparkSession
-    import spark.implicits._
-
-    if (store.committedBatch.exists(_ >= batchId)) return BatchReport(Map.empty)
-
-    val scope = new BatchScope(spark, store, batchId)
-    import scope.{scoped, scopedTable, tracked}
-
-    /** Distinct buckets of a single-column frame — the ONLY collects here. */
-    def bucketsOf(df: DataFrame, c: String): Set[Int] =
-      df.select(store.bucketOf(col(c)).as("__b")).distinct()
-        .as[Int].collect().toSet
-
-    try {
-      // A12 newest-wins per (type, id): seqs are unique per id by contract
-      val newest = tracked(changes.toDF()
-        .groupBy(col("resourceType"), col("resourceId"))
-        .agg(max_by(col("change"), col("seq")).as("change"),
-          max(col("seq")).as("seq")))
-
-      // revision-ledger maintenance (no CAS on a backlog — there is no
-      // per-writer expectation to check — but later CAS batches must see
-      // these seqs as the current revisions)
-      if (store.tableNames.contains(SeqTable)) {
-        val seqTbl = scopedTable(SeqTable, SourceId)
-        seqTbl.widen(bucketsOf(newest, "resourceId"))
-        seqTbl.update(mergeSeqs(_, newest.select(col("resourceType").as(SourceType),
-          col("resourceId").as(SourceId), col("seq"))))
-      }
-
-      // (mapTarget -> touched keys frame), merged across specs
-      var affectedKeys = Map.empty[String, DataFrame]
-
-      for ((sourceName, specs) <- pipeline.mappersBySource.toSeq.sortBy(_._1)) {
-        val batch = newest.filter(col("resourceType") === sourceName)
-        val upserts = tracked(batch.filter(col("change") =!= Change.Deleted)
-          .select(col("resourceId").as(SourceId)))
-        val deletes = tracked(batch.filter(col("change") === Change.Deleted)
-          .select(col("resourceId").as(SourceId)))
-        val idBuckets = bucketsOf(batch, "resourceId")
-        if (idBuckets.nonEmpty) for (spec <- specs) {
-          val idx = scopedTable(indexName(spec.target), SourceId)
-          val idxRows = idx.widen(idBuckets)
-
-          // 1. old (type, id, key) triples of the changed ids — index
-          // lookup, not a table scan
-          val oldTriples = idxRows.filter(col(SourceType) === spec.source)
-            .join(batch.select(col("resourceId").as(SourceId)),
-              Seq(SourceId), "left_semi")
-            .select(col(SourceType), col(SourceId), col(Key))
-
-          // 2. re-map only the touched source rows — a semi join against
-          // the distributed id set (backlog-sized: not an isin pushdown)
-          val src = sources(spec.source)
-          val touchedSrc = src.join(
-            upserts.select(col(SourceId).as("__id")),
-            col(spec.idCol).cast("string") === col("__id"), "left_semi")
-          val fresh = tracked(MapOp(spec, touchedSrc))
-          val freshTriples = fresh
-            .select(col(SourceType), col(SourceId), col(Key)).distinct()
-
-          // 3. touched keys stay a frame; only their BUCKETS are collected
-          val touchedKeys = tracked(oldTriples.select(col(Key))
-            .unionByName(freshTriples.select(col(Key))).distinct())
-          val tbl = scopedTable(spec.target, Key)
-          tbl.widen(bucketsOf(touchedKeys, Key))
-
-          // 4. delete-old-then-rewrite within the scoped buckets only —
-          // the driver path's algebra over distributed id frames
-          tbl.update(rewriteMapRows(_, spec.source, upserts,
-            deletes.select(col(SourceId).as("__del")), fresh))
-
-          // 5. index maintenance. The driver path's triple-set elision is a
-          // driver-side compare — here the stage-time fingerprint provides
-          // the same write elision.
-          idx.update(rewriteIndex(_, spec.source, upserts, freshTriples))
-
-          if (pipeline.reducersBySource.contains(spec.target))
-            affectedKeys += spec.target -> (affectedKeys.get(spec.target) match {
-              case Some(prev) =>
-                tracked(prev.unionByName(touchedKeys).distinct())
-              case None => touchedKeys
-            })
-        }
-      }
-
-      val anyDeletes =
-        !newest.filter(col("change") === Change.Deleted).isEmpty
-
-      for ((mapTarget, keysDf) <- affectedKeys.toSeq.sortBy(_._1)) {
-        val specs = pipeline.mapSpecsByTarget(mapTarget)
-        val tbl = scoped(mapTarget)
-        for (rspec <- pipeline.reducersBySource(mapTarget)) {
-          val table = tbl.rows
-
-          // A15 version barrier over the scoped rows
-          val ready = tracked(keysDf.join(staleKeys(table, specs), Seq(Key), "left_anti"))
-
-          val rtbl = scopedTable(rspec.target, Key)
-          rtbl.widen(bucketsOf(ready, Key))
-          rtbl.update(replaceReady(_, table, ready, rspec, batchTimestampNs))
-
-          // A13 deferred purge of reduced tombstones (same corner-case
-          // reasoning as the driver path)
-          if (anyDeletes) {
-            val purged = tracked(purgedTriples(tbl.rows, ready))
-            tbl.update(purgeTombstones(_, ready))
-            val purgedBuckets = bucketsOf(purged, SourceId)
-            if (purgedBuckets.nonEmpty) {
-              val idx = scopedTable(indexName(mapTarget), SourceId)
-              idx.widen(purgedBuckets)
-              idx.update(purgeIndex(_, purged.select(col(SourceType).as("__pt"),
-                col(SourceId).as("__pi"), col(Key).as("__pk"))))
-            }
-          }
-        }
-      }
-
-      val report = BatchReport(scope.stageDirty())
-      store.commit(batchId, ledger)
-      report
-    } catch {
-      case e: Throwable => store.discardStaged(); throw e
-    } finally {
-      scope.releaseAll()
     }
   }
 

@@ -3,6 +3,7 @@ package graft.incr
 import graft.core.Pipeline
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.jdk.CollectionConverters._
 
 /** Listener wiring for the streaming engine: maps Spark's
   * idle/progress/termination events onto a retry drain WITHOUT blocking the
@@ -87,9 +88,18 @@ private[incr] final class DrainDispatch(drain: () => Unit) {
   * an already-applied change is idempotent (the engine re-fetches current
   * source state by id), so the end state still equals the recompute.
   *
+  * Backlog contract: a stream batch above [[BucketedRun.MaxCollectedBatch]]
+  * changes (a stream replaying its queue after downtime) drains as a
+  * sequence of engine batches of at most that many changes each, newest
+  * change per id over the whole backlog — the reference's bounded queue
+  * polls (processor.py:437-461). Each chunk follows the protocol above, so
+  * every batch has one failure rule: bisection and dead letters.
+  *
   * Engine-level exactly-once: the last fully-accounted stream batch id is
   * persisted in the ledger payload; a re-delivered stream batch re-applies
-  * only if its accounting never committed.
+  * only if its accounting never committed. A backlog's chunks commit with
+  * the previous pointer and only its last chunk advances it, so a crash
+  * mid-backlog re-delivers the whole stream batch.
   */
 final class BucketedStreamingEngine(
     spark: SparkSession,
@@ -151,13 +161,21 @@ final class BucketedStreamingEngine(
   def processBatch(changes: Seq[Change], streamBatchId: Long): Unit = batchLock.synchronized {
     // exactly-once at the engine level: a re-delivered stream batch whose
     // accounting already committed is dropped (due retries still drain)
-    val fresh = if (streamBatchId >= 0 && streamBatchId <= lastStreamBatch) Nil else changes
+    val fresh = if (redelivered(streamBatchId)) Nil else changes
     val now = clock()
-    val due = ledger.due(now)
+    applyWork(fresh, ledger.due(now), now, math.max(lastStreamBatch, streamBatchId))
+  }
+
+  private def redelivered(streamBatchId: Long): Boolean =
+    streamBatchId >= 0 && streamBatchId <= lastStreamBatch
+
+  /** `fresh` changes plus the `due` retries as one engine batch, whose
+    * accounting commits with the `stream=` pointer at `nextStream`. */
+  private def applyWork(fresh: Seq[Change], due: Seq[FailedChange], now: Long,
+                        nextStream: Long): Unit = {
     val work = (due.map(_.change) ++ fresh).distinct.sortBy(_.seq)
     if (work.isEmpty) return
 
-    val nextStream = math.max(lastStreamBatch, streamBatchId)
     // optimistic payload: the ledger as it will read if every record applies
     val optimistic = {
       val l = RetryLedger.restore(maxRetries, ledger.serialize)
@@ -176,60 +194,29 @@ final class BucketedStreamingEngine(
     }
   }
 
-  /** `foreachBatch` body. The backlog contract is enforced by the bounded
-    * collect: a backlog-sized batch runs through the DISTRIBUTED scoped
-    * path ([[BucketedRun.applyChangesDistributed]]) — the batch never sits
-    * on the driver and IO stays O(touched buckets), no recompute cliff.
-    * Pending retries whose ids the batch covers are superseded (the apply
-    * re-fetched current source state for them); others keep their backoff
-    * schedule. Per-record bisection needs driver-held sub-batches, so a
-    * poison record fails the WHOLE distributed batch — that failure
-    * escalates to [[BucketedRun.resyncFull]] (which clears pending: the
-    * recompute reflects current source state); dead letters survive as the
-    * audit log either way. */
+  /** `foreachBatch` body. One bounded collect tells a notification-sized
+    * batch, which runs as one engine batch, from a backlog, which drains as
+    * bounded engine batches ([[BucketedStreamingEngine.backlogChunks]]):
+    * the re-delivery check runs once, due retries ride the first chunk,
+    * and only the last chunk advances the `stream=` pointer. A pending
+    * retry whose id a chunk covers is superseded when that chunk applies,
+    * as in any batch. */
   def processBatch(changes: Dataset[Change], streamBatchId: Long): Unit = {
     val bounded = changes.limit(BucketedRun.MaxCollectedBatch + 1).collect().toSeq
-    if (bounded.size > BucketedRun.MaxCollectedBatch) batchLock.synchronized {
-      // engine-level exactly-once, same as the driver path
-      if (streamBatchId >= 0 && streamBatchId <= lastStreamBatch) return
-      val next = store.committedBatch.getOrElse(0L) + 1
-      lastStreamBatch = math.max(lastStreamBatch, streamBatchId)
-      // supersede pending retries the batch covers BEFORE the apply: the
-      // collect reads only the incoming batch (bounded by |pending|), never
-      // store state, so the superseded ledger + stream pointer can ride the
-      // apply's ONE manifest swap — applied state and retry accounting
-      // commit atomically, like the driver path. (A crash can then never
-      // re-deliver a fully-applied backlog or resurrect superseded
-      // retries.)
-      if (ledger.pending.nonEmpty) {
-        val session = changes.sparkSession
-        import session.implicits._
-        val pendIds = ledger.pending.map(f =>
-          (f.change.resourceType, f.change.resourceId)).toSet
-        val covered = changes
-          .filter(c => pendIds.contains((c.resourceType, c.resourceId)))
-          .groupByKey(c => (c.resourceType, c.resourceId))
-          .reduceGroups((a, b) => if (a.seq >= b.seq) a else b)
-          .map(_._2)
-          .collect().toSeq
-        ledger.record(covered, Nil, Nil, clock())
-      }
-      try {
-        BucketedRun.applyChangesDistributed(pipeline, sources, store, changes,
-          batchTimestampNs = next, batchId = next,
-          ledger = Some(payloadOf(ledger, lastStreamBatch)))
-      } catch {
-        case _: Exception =>
-          ledger.clearPending()
-          BucketedRun.resyncFull(pipeline, sources, store,
-            store.committedBatch.getOrElse(0L) + 1)
-          // the resync committed without accounting — publish the cleared
-          // ledger + advanced stream pointer in a follow-up swap
-          store.commit(store.committedBatch.getOrElse(0L) + 1,
-            Some(payloadOf(ledger, lastStreamBatch)))
+    if (bounded.size <= BucketedRun.MaxCollectedBatch) processBatch(bounded, streamBatchId)
+    else batchLock.synchronized {
+      // a re-delivered backlog only drains due retries, like any re-delivery
+      val chunks =
+        if (redelivered(streamBatchId)) Iterator(Seq.empty[Change])
+        else BucketedStreamingEngine.backlogChunks(changes)
+      var first = true
+      for (chunk <- chunks) {
+        val now = clock()
+        applyWork(chunk, if (first) ledger.due(now) else Nil, now,
+          if (chunks.hasNext) lastStreamBatch else math.max(lastStreamBatch, streamBatchId))
+        first = false
       }
     }
-    else processBatch(bounded, streamBatchId)
   }
 
   /** Drain whatever retries are due right now (the reference's idle poll). */
@@ -265,6 +252,26 @@ final class BucketedStreamingEngine(
 }
 
 object BucketedStreamingEngine {
+  /** A backlog as bounded driver batches: newest change per
+    * (resourceType, resourceId) over the WHOLE backlog (A12 — an older
+    * delete in a later chunk would otherwise tombstone a live id), at most
+    * [[BucketedRun.MaxCollectedBatch]] changes per chunk. The newest-per-id
+    * frame is split round-robin into ceil(n / MaxCollectedBatch) partitions
+    * and read one partition per job, so the driver holds O(that ceiling)
+    * change rows at a time. */
+  private[graft] def backlogChunks(changes: Dataset[Change]): Iterator[Seq[Change]] = {
+    val spark = changes.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, max, max_by}
+    val newest = changes.groupBy(col("resourceType"), col("resourceId"))
+      .agg(max(col("seq")).as("seq"), max_by(col("change"), col("seq")).as("change"))
+      .as[Change]
+    val n = newest.count()
+    val parts = math.max(1L, (n + BucketedRun.MaxCollectedBatch - 1) / BucketedRun.MaxCollectedBatch)
+    newest.repartition(parts.toInt).toLocalIterator().asScala
+      .grouped(BucketedRun.MaxCollectedBatch)
+  }
+
   /** Crash/restart recovery: resume table state AND the retry ledger from
     * the store's committed manifest; cold-start (full recompute, bucketed
     * write) when the store is empty. */

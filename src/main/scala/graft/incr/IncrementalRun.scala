@@ -19,7 +19,7 @@ final case class MrState(tables: Map[String, DataFrame]) {
   * equal to this recompute after every batch (the invariant the reference's
   * whole notification loop maintains, processor.py:99-227). So this object
   * is the ground truth that specs and `perfbench` compare the store against,
-  * the cold-start and backlog-resync primitive ([[BucketedRun.initialize]],
+  * the cold-start and handler-resync primitive ([[BucketedRun.initialize]],
   * [[BucketedRun.resyncFull]], A16/A17), and the staged resync of `Jobs`.
   *
   * Provenance columns (`_mr_source_type`, `_mr_source_id`) ride along on

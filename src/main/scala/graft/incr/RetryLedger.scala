@@ -42,11 +42,6 @@ final class RetryLedger(val maxRetries: Int) {
   private def key(c: Change): (String, String, Long) =
     (c.resourceType, c.resourceId, c.seq)
 
-  /** Drop all pending retries (NOT dead letters — they are the audit log).
-    * Used when a resync supersedes the queue: the recompute reflects current
-    * source state, so replaying older failed notifications is moot. */
-  def clearPending(): Unit = pendingMap = Map.empty
-
   /** Failures whose backoff gate is open at `now`. */
   def due(now: Long): Seq[FailedChange] =
     pendingMap.values.filter(f => now >= RetryLedger.gateOpensAtMs(f)).toSeq

@@ -273,7 +273,7 @@ object EventQueries {
         .groupBy(col("event_id"))
         .agg(count(col("err_value")).as("n_err"),
           round(sum(col("err_value")), 2).as("sum_err"))
-    }, oracle =
+    }, streaming = true, oracle =
       // matches ∪ closed-window misses: an unmatched signup emits its
       // n_err = 0 row iff the final watermark (min of both sides' max
       // event time − 1 h delay) passed its window end

@@ -247,7 +247,7 @@ object IncrQueries {
     // bucketed store — full recompute written hash-bucketed by _mr_key
     // (one-time, memoized per scale dir like any production state), then a
     // SMALL batch (~0.04% of ids — the shape the bucketed path exists for;
-    // a backlog-sized batch is what resync A16/A17 is for) that reads and
+    // bounded by construction, so it is collected whole) that reads and
     // rewrites only touched buckets and swaps the manifest; the result is
     // read back from parquet (a real durability round-trip). Every
     // invocation applies under a FRESH batch id (re-upserting the %4999
@@ -272,8 +272,8 @@ object IncrQueries {
         .select((col("o_orderkey") + 10000000L).as("seq"), lit(Change.Deleted).as("change"),
           lit("orders").as("resourceType"), col("o_orderkey").cast("string").as("resourceId"))
       val next = store.committedBatch.getOrElse(0L) + 1
-      BucketedRun.applyChanges(ordersSumPipeline, full, store,
-        created.unionByName(deleted).as[Change], next, batchId = next)
+      BucketedRun.applyChanges(s, ordersSumPipeline, full, store,
+        created.unionByName(deleted).as[Change].collect().toSeq, next, batchId = next)
       store.table(s, "orders_sum")
         .select(col(Key), round(col(Value), 2).as("sum_value"))
     }, oracle =

@@ -32,15 +32,18 @@ object Registry {
       MmQueries.all ++ ImageQueries.all ++ WebQueries.all ++ GraphQueries.all)
 
   /** The queries called `names`, in that order. Throws, naming every
-    * unknown name, so a typo never selects nothing. */
+    * unknown name, so a typo never selects nothing; an empty `names` (what
+    * `",".split(",")` gives) throws too. */
   def lookup(names: Seq[String]): Seq[Query] = {
+    if (names.isEmpty) throw new NoSuchElementException("no query name given")
     val unknown = names.filterNot(all.contains)
     if (unknown.nonEmpty)
       throw new NoSuchElementException(s"unknown query name(s): ${unknown.mkString(",")}")
     names.map(all)
   }
 
-  /** [[lookup]] for a main: an unknown name goes to stderr, exit 1. */
+  /** [[lookup]] for a main: an unknown name or an empty selection goes to
+    * stderr, exit 1. */
   def lookupOrExit(names: Seq[String]): Seq[Query] =
     try lookup(names)
     catch { case e: NoSuchElementException =>

@@ -26,8 +26,8 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
   private def srcDf(rows: (String, String, Double)*): DataFrame =
     rows.toDF("id", "k", "v")
 
-  private def changes(cs: (Long, String, String)*) =
-    cs.map { case (seq, op, id) => Change(seq, op, "src", id) }.toDS()
+  private def changes(cs: (Long, String, String)*): Seq[Change] =
+    cs.map { case (seq, op, id) => Change(seq, op, "src", id) }
 
   private def newStore(buckets: Int = 8, keepSnapshots: Int = 8): BucketedStateStore =
     new BucketedStateStore(Files.createTempDirectory("graft_bstore").toString, buckets,
@@ -45,17 +45,17 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     assert(reduced(store) == Map("k1" -> 3.0, "k2" -> 5.0))
 
     data = srcDf(("a", "k1", 1.0), ("b", "k2", 7.0), ("c", "k2", 5.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "b")), 1L, batchId = 1)
     assert(reduced(store) == Map("k1" -> 1.0, "k2" -> 12.0))
 
     data = data.union(srcDf(("d", "k1", 10.0)))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((2, Change.Created, "d")), 2L, batchId = 2)
     assert(reduced(store) == Map("k1" -> 11.0, "k2" -> 12.0))
 
     data = srcDf(("a", "k1", 1.0), ("b", "k2", 7.0), ("d", "k1", 10.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((3, Change.Deleted, "c")), 3L, batchId = 3)
     assert(reduced(store) == Map("k1" -> 11.0, "k2" -> 7.0))
 
@@ -72,7 +72,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     val sources: IncrementalRun.Sources = _ => data
     BucketedRun.initialize(pipeline, sources, store)
     data = srcDf(("a", "k1", 1.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Deleted, "b")), 1L, batchId = 1)
     assert(reduced(store) == Map("k1" -> 1.0))
   }
@@ -88,7 +88,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     assert(before("m").size == 8) // every bucket populated at init
 
     data = data.union(srcDf(("id64", "key7", 100.0)))
-    val report = BucketedRun.applyChanges(pipeline, sources, store,
+    val report = BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Created, "id64")), 1L, batchId = 1)
 
     // one touched key -> exactly one bucket replaced on the key-bucketed
@@ -120,7 +120,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     // same id, same key, new VALUE: the map and reduce tables change but
     // every (type, id, key) index triple is identical — no index staging
     data = srcDf(("a", "k1", 9.0), ("b", "k2", 2.0))
-    val report = BucketedRun.applyChanges(pipeline, sources, store,
+    val report = BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "a")), 1L, batchId = 1)
     assert(!report.staged.contains(BucketedRun.indexName("m")),
       s"unchanged index must not be staged: ${report.staged.keySet}")
@@ -130,7 +130,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
 
     // a key-changing update DOES stage the index
     data = srcDf(("a", "k9", 9.0), ("b", "k2", 2.0))
-    val r2 = BucketedRun.applyChanges(pipeline, sources, store,
+    val r2 = BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((2, Change.Updated, "a")), 2L, batchId = 2)
     assert(r2.staged.contains(BucketedRun.indexName("m")))
     assert(reduced(store) == Map("k9" -> 9.0, "k2" -> 2.0))
@@ -174,12 +174,12 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     val sources: IncrementalRun.Sources = _ => data
     BucketedRun.initialize(pipeline, sources, store)
     data = srcDf(("a", "k1", 4.0), ("b", "k2", 2.0))
-    val first = BucketedRun.applyChanges(pipeline, sources, store,
+    val first = BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "a")), 1L, batchId = 1)
     assert(first.staged.nonEmpty)
     val paths = store.bucketPaths("r")
     // crash-recovery redelivery of batch 1: nothing staged, nothing rewritten
-    val replay = BucketedRun.applyChanges(pipeline, sources, store,
+    val replay = BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "a")), 1L, batchId = 1)
     assert(replay.staged.isEmpty)
     assert(store.bucketPaths("r") == paths)
@@ -192,7 +192,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     val sources: IncrementalRun.Sources = _ => data
     BucketedRun.initialize(pipeline, sources, store)
     data = srcDf(("a", "k1", 4.0), ("b", "k2", 2.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "a")), 1L, batchId = 1)
 
     val reopened = new BucketedStateStore(store.root, store.numBuckets)
@@ -217,7 +217,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
         (m.select(col(SourceType), col(SourceId), col(Key)).distinct(), SourceId),
       "r" -> (r, Key)))
 
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "a")), 1L, batchId = 1)
     // k1 holds b at a stale version → postponed: old output survives
     assert(reduced(store) == Map("k1" -> 1.0, "k2" -> 5.0))
@@ -252,7 +252,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     val sources: IncrementalRun.Sources = _ => data
     BucketedRun.initialize(pipeline, sources, store)
     data = srcDf(("a", "k1", 9.0), ("b", "k2", 2.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "a")), 1L, batchId = 1)
     store.vacuum()
     assert(reduced(store) == Map("k1" -> 9.0, "k2" -> 2.0))
@@ -274,7 +274,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     BucketedRun.initialize(p, sources, store)
     assert(reduced(store) == Map("k1" -> 3.0, "x-k1" -> 3.0))
     data = srcDf(("a", "k1", 1.0))
-    BucketedRun.applyChanges(p, sources, store,
+    BucketedRun.applyChanges(spark, p, sources, store,
       changes((1, Change.Deleted, "b")), 1L, batchId = 1)
     assert(reduced(store) == Map("k1" -> 1.0, "x-k1" -> 1.0))
   }
@@ -291,10 +291,10 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     val b0 = store.committedBatch.get
 
     data = srcDf(("a", "k1", 9.0), ("b", "k2", 2.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((1, Change.Updated, "a")), 1L, batchId = b0 + 1)
     data = srcDf(("a", "k1", 9.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
       changes((2, Change.Deleted, "b")), 2L, batchId = b0 + 2)
 
     assert(reduced(store) == Map("k1" -> 9.0))
@@ -349,7 +349,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     try {
       (1 to 12).foreach { i =>
         data = srcDf(("a", "k1", i.toDouble))
-        BucketedRun.applyChanges(pipeline, sources, store,
+        BucketedRun.applyChanges(spark, pipeline, sources, store,
           changes((i.toLong, Change.Updated, "a")), i.toLong, batchId = b0 + i)
       }
     } finally {
@@ -380,7 +380,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     val b0 = store.committedBatch.get
     for (i <- 1 to 4) {
       data = srcDf(("a", "k1", i.toDouble))
-      BucketedRun.applyChanges(pipeline, sources, store,
+      BucketedRun.applyChanges(spark, pipeline, sources, store,
         changes((i.toLong, Change.Updated, "a")), i.toLong, batchId = b0 + i)
     }
     // only the 2 newest snapshots retained; older as-of reads now refuse
@@ -427,45 +427,6 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     assert(reopened.table(spark, "r").columns.contains("extra"))
     // evolving an existing column is refused
     assertThrows[IllegalArgumentException](reopened.evolveTable("r", "extra BIGINT"))
-  }
-
-  test("over-ceiling batch: distributed path ≡ recompute, no resync, scoped IO") {
-    val store = newStore(buckets = 16)
-    var data = srcDf(("a", "k1", 1.0), ("b", "k1", 2.0), ("c", "k2", 5.0),
-      ("e", "k3", 8.0))
-    val sources: IncrementalRun.Sources = _ => data
-    BucketedRun.initialize(pipeline, sources, store)
-    val rBefore = store.bucketPaths("r")
-
-    // new snapshot: a updated, d created, c deleted; e/k3 untouched.
-    // 33 changes against a ceiling of 10 exercise the distributed path:
-    // 30 redundant updates for a (A12 newest-wins as an aggregate), a
-    // creation for d whose OLDER delete (seq 5) must lose, and c's delete
-    data = srcDf(("a", "k1", 100.0), ("b", "k1", 2.0), ("d", "k2", 7.0),
-      ("e", "k3", 8.0))
-    val backlog = ((1 to 30).map(i => Change(i.toLong, Change.Updated, "src", "a")) ++
-      Seq(Change(5L, Change.Deleted, "src", "d"),
-        Change(31L, Change.Created, "src", "d"),
-        Change(32L, Change.Deleted, "src", "c"))).toDS()
-    val report = BucketedRun.applyChanges(pipeline, sources, store, backlog,
-      batchTimestampNs = 1L, batchId = 1L, maxBatchSize = 10)
-
-    assert(!report.resync, "must not fall back to a full recompute")
-    assert(report.staged.nonEmpty)
-    assert(reduced(store) == Map("k1" -> 102.0, "k2" -> 7.0, "k3" -> 8.0))
-    // A13 tombstone purge + index purge ran distributed too
-    assert(store.table(spark, "m").filter(col(Deleted)).count() == 0)
-    assert(store.table(spark, BucketedRun.indexName("m"))
-      .filter(col(SourceId) === "c").count() == 0)
-    // untouched buckets carried by REFERENCE: k3's reduce bucket directory
-    // is the exact committed path from before the batch
-    val bucketOfKey = (k: String) =>
-      Seq(k).toDF("k").select(store.bucketOf(col("k"))).as[Int].head()
-    val b3 = bucketOfKey("k3")
-    assert(Set("k1", "k2").forall(k => bucketOfKey(k) != b3),
-      "fixture keys must not collide for the carried-by-reference check")
-    assert(store.bucketPaths("r")(b3) == rBefore(b3),
-      "an untouched bucket must keep its committed directory")
   }
 
   test("CAS expectedSeq: stale writer raises WriteConflict, current applies") {
@@ -530,14 +491,12 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
         expectedSeq = Map(("src", "a") -> 0L))
     }
 
-    // the DISTRIBUTED path keeps the ledger current too: an over-ceiling
-    // backlog stamps its newest seq per id, so a writer who read before
-    // the backlog conflicts against the backlog's revision
+    // a batch holding many changes of one id stamps its NEWEST seq, so a
+    // writer who read before the batch conflicts against that revision
     data = srcDf(("a", "k1", 50.0))
-    val backlog = (20L to 45L)
-      .map(i => Change(i, Change.Updated, "src", "a")).toDS()
-    BucketedRun.applyChanges(pipeline, sources, store, backlog,
-      8L, batchId = 8L, maxBatchSize = 5)
+    val backlog = (20L to 45L).map(i => Change(i, Change.Updated, "src", "a"))
+    BucketedRun.applyChanges(spark, pipeline, sources, store, backlog,
+      8L, batchId = 8L)
     assert(reduced(store) == Map("k1" -> 50.0, "k2" -> 9.0))
     val ex4 = intercept[BucketedRun.WriteConflict] {
       BucketedRun.applyChanges(spark, pipeline, sources, store,
@@ -553,7 +512,7 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
     assert(reduced(store) == Map("k1" -> 51.0, "k2" -> 9.0))
   }
 
-  test("property: random batches — distributed path ≡ driver path ≡ recompute") {
+  test("property: random batches — driver path ≡ recompute") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     def sample[A](g: Gen[A], seed: Long): A =
@@ -567,15 +526,13 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
       .toDF("id", "k", "v")
     val sources: IncrementalRun.Sources = _ => data
 
-    val storeD = newStore(buckets = 8) // every batch forced distributed
-    val storeS = newStore(buckets = 8) // every batch on the driver path
-    BucketedRun.initialize(pipeline, sources, storeD)
-    BucketedRun.initialize(pipeline, sources, storeS)
+    val store = newStore(buckets = 8)
+    BucketedRun.initialize(pipeline, sources, store)
 
     var seqN = 0L
     for (g <- 1L to 5L) {
       // 6 random ops over ids 0..19: duplicates per id exercise A12
-      // newest-wins in both shapes; deletes exercise tombstone purge
+      // newest-wins; deletes exercise tombstone purge
       val ops = (0 until 6).map { j =>
         val id = s"id${sample(Gen.chooseNum(0, 19), g * 1000 + j)}"
         val isDel = sample(Gen.chooseNum(0, 3), g * 777 + j) == 0
@@ -589,24 +546,12 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
       }
       val cs = ops.map { case (s, id, isDel, _) =>
         Change(s, if (isDel) Change.Deleted else Change.Updated, "src", id) }
-      // ceiling of 2 forces the distributed path on storeD every batch;
-      // storeS takes the notification-sized driver path
-      val rd = BucketedRun.applyChanges(pipeline, sources, storeD,
-        cs.toDS(), g, batchId = g, maxBatchSize = 2)
-      assert(!rd.resync)
-      BucketedRun.applyChanges(spark, pipeline, sources, storeS, cs, g, batchId = g)
+      BucketedRun.applyChanges(spark, pipeline, sources, store, cs, g, batchId = g)
     }
 
     val expected = truth.toSeq.groupBy { case (id, _) => keyOf(id) }
       .view.mapValues(_.map(_._2).sum).toMap
-    assert(reduced(storeD) == expected, "distributed path diverged from recompute")
-    assert(reduced(storeS) == expected, "driver path diverged from recompute")
-    // the two paths agree row-for-row on the map table too (timestamps are
-    // provenance timing, not content)
-    def mRows(st: BucketedStateStore) = st.table(spark, "m")
-      .select(col(SourceId), col(Key), col(Value), col(Deleted))
-      .as[(String, String, Double, Boolean)].collect().toSet
-    assert(mRows(storeD) == mRows(storeS))
+    assert(reduced(store) == expected, "driver path diverged from recompute")
   }
 
   // ---- manifest-resolved reads ---------------------------------------------
@@ -680,9 +625,9 @@ class BucketedIncrSpec extends AnyFunSuite with SparkTestBase {
       sparkListedRead(store, dirs0.values, schema).inputFiles.toSet)
 
     // tableAsOf on an older retained snapshot reads that batch's directories
-    BucketedRun.applyChanges(pipeline, _ => wideRows(Set(1, 2)), store,
+    BucketedRun.applyChanges(spark, pipeline, _ => wideRows(Set(1, 2)), store,
       changes((1, Change.Updated, "id1"), (2, Change.Updated, "id2")), 2L, batchId = b0 + 1)
-    BucketedRun.applyChanges(pipeline, _ => wideRows(Set(1, 2, 3)), store,
+    BucketedRun.applyChanges(spark, pipeline, _ => wideRows(Set(1, 2, 3)), store,
       changes((3, Change.Updated, "id3")), 3L, batchId = b0 + 2)
     assert(store.bucketPaths("r") != dirs0)
     assertSameRows(store.tableAsOf(spark, "r", b0), sparkListedRead(store, dirs0.values, schema))

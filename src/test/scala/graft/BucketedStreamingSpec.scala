@@ -308,37 +308,24 @@ class BucketedStreamingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("backlog guard: an over-limit batch runs distributed, still bucket-scoped") {
-    var data = Seq(("a", "k1", 1.0), ("b", "k2", 2.0)).toDF("id", "k", "v")
-    val sources: IncrementalRun.Sources = _ => data
-    val store = newStore()
-    BucketedRun.initialize(pipeline, sources, store)
-
-    // 50 changes against a ceiling of 10: the driver must never hold more
-    // than maxBatchSize+1 change rows; the batch applies through the
-    // DISTRIBUTED path (no resync flag, staged tables populated) and state
-    // equals a fresh recompute over current snapshots
-    data = Seq(("a", "k1", 100.0), ("b", "k2", 2.0), ("c", "k1", 3.0)).toDF("id", "k", "v")
-    val backlog = (1 to 50).map(i =>
-      Change(i.toLong, Change.Updated, "src", if (i % 2 == 0) "a" else "c")).toDS()
-    val report = BucketedRun.applyChanges(pipeline, sources, store, backlog,
-      batchTimestampNs = 1L, batchId = 1L, maxBatchSize = 10)
-    assert(!report.resync, "over-limit batch must NOT divert to a full resync")
-    assert(report.staged.nonEmpty, "distributed batch must stage scoped buckets")
-    assert(reduced(store) == Map("k1" -> 103.0, "k2" -> 2.0))
-    assert(store.committedBatch.contains(1L))
-    // file IO stayed scoped: only the touched key's bucket was staged for
-    // the reduce table — k2 was untouched and its bucket must not rewrite
-    val bucketOfKey = (k: String) =>
-      Seq(k).toDF("k").select(store.bucketOf(col("k"))).as[Int].head()
-    assert(report.staged("r").buckets == Set(bucketOfKey("k1")))
-
-    // a normal batch afterwards still works incrementally
-    data = Seq(("a", "k1", 100.0), ("b", "k2", 9.0), ("c", "k1", 3.0)).toDF("id", "k", "v")
-    val r2 = BucketedRun.applyChanges(pipeline, sources, store,
-      Seq(Change(60, Change.Updated, "src", "b")).toDS(), 2L, batchId = 2L)
-    assert(!r2.resync && r2.staged.nonEmpty)
-    assert(reduced(store) == Map("k1" -> 103.0, "k2" -> 9.0))
+  test("backlog chunks: bounded, every id once, with its newest change") {
+    // MaxCollectedBatch + 5 distinct ids, each offered twice; the older
+    // change of every fifth id is a delete that must lose (A12 across the
+    // whole backlog, not per chunk)
+    val n = BucketedRun.MaxCollectedBatch + 5
+    val backlog = (0 until n).flatMap { i =>
+      val id = s"id$i"
+      Seq(Change(i.toLong, if (i % 5 == 0) Change.Deleted else Change.Updated, "src", id),
+        Change(n + i.toLong, Change.Updated, "src", id))
+    }.toDS()
+    val chunks = BucketedStreamingEngine.backlogChunks(backlog).toSeq
+    assert(chunks.size == 2)
+    assert(chunks.forall(_.size <= BucketedRun.MaxCollectedBatch))
+    val all = chunks.flatten
+    assert(all.size == n, "every id exactly once")
+    assert(all.map(_.resourceId).toSet.size == n)
+    assert(all.forall(c => c.change == Change.Updated &&
+      c.seq == n + c.resourceId.stripPrefix("id").toLong), "newest change per id")
   }
 
   test("engine backlog: covered pending retries are superseded, durably") {
@@ -353,15 +340,27 @@ class BucketedStreamingSpec extends AnyFunSuite with SparkTestBase {
     engine.processBatch(Seq(Change(1, Change.Updated, "src", "p")), streamBatchId = 0)
     assert(engine.pending.size == 1)
 
-    // the source heals and a huge re-delivery arrives: the distributed
-    // backlog apply re-fetches current state for id p, so its pending
-    // retry is superseded and cleared durably (no full resync involved)
+    // the source heals and a huge re-delivery arrives: its chunk re-fetches
+    // current state for id p, so the pending retry is superseded and
+    // cleared durably (no full resync involved)
     data = Seq(("p", "k1", 4.0)).toDF("id", "k", "v")
     val backlog = (1 to BucketedRun.MaxCollectedBatch + 5).map(i =>
       Change(i.toLong + 10, Change.Updated, "src", "p")).toDS()
+    def streamPointer = store.committedLedger.getOrElse("").linesIterator
+      .find(_.startsWith("stream=")).map(_.stripPrefix("stream=").toLong)
+    assert(streamPointer.contains(0L))
+    val before = store.committedBatch.get
     engine.processBatch(backlog, streamBatchId = 1)
     assert(reduced(store) == Map("k1" -> 4.0))
     assert(engine.pending.isEmpty)
+    // one chunk, one commit, and it advanced the stream pointer
+    assert(store.committedBatch.contains(before + 1))
+    assert(streamPointer.contains(1L))
+    // re-delivering stream batch 1 applies and commits nothing
+    data = Seq(("p", "k1", 9.0)).toDF("id", "k", "v")
+    engine.processBatch(backlog, streamBatchId = 1)
+    assert(store.committedBatch.contains(before + 1))
+    assert(reduced(store) == Map("k1" -> 4.0))
     val engine2 = BucketedStreamingEngine.restore(spark, poisonPipeline, sources,
       new BucketedStateStore(store.root, store.numBuckets), maxRetries = 2,
       clock = () => now)

@@ -107,8 +107,8 @@ class FsckSpec extends AnyFunSuite with SparkTestBase {
     assert(healed.map(_._1) == Seq(idx) && store.fsck().isEmpty)
     // the healed index still drives a correct incremental batch
     cur = srcDf(("a", "k1", 1.0), ("b", "k2", 7.0), ("c", "k2", 5.0))
-    BucketedRun.applyChanges(pipeline, sources, store,
-      Seq(Change(1, Change.Updated, "src", "b")).toDS(), 1L, batchId = 2)
+    BucketedRun.applyChanges(spark, pipeline, sources, store,
+      Seq(Change(1, Change.Updated, "src", "b")), 1L, batchId = 2)
     assert(reduced(store) == Map("k1" -> 1.0, "k2" -> 12.0))
   }
 

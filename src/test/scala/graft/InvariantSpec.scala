@@ -61,8 +61,8 @@ class InvariantSpec extends AnyFunSuite with SparkTestBase {
         val cs = batch.zipWithIndex.map { case (s, i) =>
           Change(i.toLong, if (s.op == Change.Deleted) Change.Deleted else Change.Updated,
             "src", s.id)
-        }.toDS()
-        BucketedRun.applyChanges(pipeline, sources, store, cs, batchNo, batchId = batchNo)
+        }
+        BucketedRun.applyChanges(spark, pipeline, sources, store, cs, batchNo, batchId = batchNo)
         val expect = reducedOf(IncrementalRun.recompute(pipeline, sources)("r"))
         val got = reducedOf(store.table(spark, "r"))
         ok = got == expect

@@ -22,7 +22,8 @@ class RegistrySpec extends AnyFunSuite {
     assert(streaming === Set(
       "dedup_minhash_stream", "events_dedup_stream", "events_enrich_stream",
       "events_hourly_forever", "events_hourly_stream", "events_hourly_upsert",
-      "events_join_stream", "events_sessions_state", "events_uniques_stream",
+      "events_join_stream", "events_join_stream_outer", "events_sessions_state",
+      "events_uniques_stream",
       "mm_decode_stream", "quality_probe_stream", "search_bm25_stream",
       "sim_ivfpq_stream", "sketch_cms_stream", "text_bpe_stream",
       "text_kn_stream", "text_unigram_stream", "warc_ingest_stream"))
@@ -36,5 +37,13 @@ class RegistrySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("typo_one,typo_two"))
     assert(!e.getMessage.contains("a6_reduce_sum"))
+  }
+
+  test("an empty selection is rejected, not run as zero queries") {
+    // `,` is what a main sees as a name list that splits to nothing
+    for (names <- Seq(Nil, ",".split(",").toSeq)) {
+      val e = intercept[NoSuchElementException](Registry.lookup(names))
+      assert(e.getMessage.contains("no query name given"))
+    }
   }
 }
